@@ -113,7 +113,6 @@ def cmd_replay(args) -> int:
         shuffle_partitions=args.shuffle_partitions or 32,
         merge_mode=args.merge_mode,
         column_merge=args.column_merge,
-        source_dedup_horizon=args.source_dedup_horizon,
         compact_delta_files=args.compact_delta_files,
         quarantine_dir=args.quarantine_dir,
     )
@@ -798,10 +797,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="row: whole-row LWW; coalesce: field-level LWW "
                         "(partial updates only touch carried columns)")
     r.add_argument("--compact-delta-files", type=int, default=8)
-    r.add_argument("--source-dedup-horizon", default=None, metavar="DELAY",
-                   help="e.g. '10 minutes': drop transport redeliveries "
-                        "(same event_seq) within this watermark before the "
-                        "MERGE; converged state is unchanged")
     r.add_argument("--max-files-per-trigger", type=int, default=None)
     r.add_argument("--v2-schema", action="store_true")
     r.add_argument("--quarantine-dir", default=None,

@@ -67,12 +67,6 @@ class EngineConfig:
     #          value-idempotent under re-delivery because the re-emitted
     #          folded state is byte-identical. Row-mode only.
     tie_wins: str = "state"
-    # Watermark horizon for SOURCE-side transport dedup
-    # (dropDuplicatesWithinWatermark on event_seq in front of the MERGE).
-    # None disables. The LWW MERGE absorbs redeliveries exactly either way;
-    # enabling this trims them BEFORE they cost shuffle bytes — worth it
-    # when the transport redelivers a few percent at 10^10 events/day.
-    source_dedup_horizon: str | None = None
     # Ingest-time PII redaction (functions/pii.py): scrub email/SSN/phone/
     # IPv4 from `text` INSIDE the merge projection, after normalization,
     # on the O(keys) winner rows — so raw PII never reaches a data file

@@ -53,21 +53,6 @@ def shingles(col: Column | str, k: int = 5) -> Column:
     )
 
 
-def minhash_signature(col: Column | str, band: int, k: int = 5) -> Column:
-    """One MinHash band: min over shingles of an 8-hex-char slice of
-    md5(shingle).
-
-    A lexicographic min over a uniform hash of the shingle set — the standard
-    single-permutation MinHash estimator. Bands reuse ONE md5 per shingle by
-    taking disjoint 8-char slices of the 32-char digest (4 independent 32-bit
-    hashes per md5) — 4x cheaper than hashing per band, and byte-identical
-    in DuckDB for the oracle."""
-    sh = shingles(col, k)
-    return F.array_min(
-        F.transform(sh, lambda s: F.substring(F.md5(s), 1 + 8 * band, 8))
-    )
-
-
 def gram_array(col: Column | str, k: int = 5, mode: str = "char") -> Column:
     """The shingle set LSH/Jaccard operate on: char k-shingles or word
     k-grams. Word grams are the corpus-scale setting (Gopher / RefinedWeb /

@@ -449,13 +449,9 @@ def apply_batch(
     # the text decode and the fused-merge exchange ships ~half the bytes on
     # every delta-append batch. Compact buckets (full bucket rewrite) and
     # coalesce mode (stored column values can fill into written rows) keep
-    # the full scan. SPARK_GRAFT_NO_TARGET_PRUNE=1 restores it for A/B.
+    # the full scan.
     meta_keep = set(key_cols) | set(order_cols) | {"_deleted", "_del_hw"}
-    prune_ok = (
-        config.merge_mode == "mor"
-        and config.column_merge != "coalesce"
-        and not os.environ.get("SPARK_GRAFT_NO_TARGET_PRUNE")
-    )
+    prune_ok = config.merge_mode == "mor" and config.column_merge != "coalesce"
     full_files = [f for f in read_files if not prune_ok or f.bucket in compact]
     meta_files = [f for f in read_files if prune_ok and f.bucket not in compact]
     branches = []
@@ -551,35 +547,29 @@ def apply_batch(
 
     out = out.drop("_src_rank", "_n_s", "_has_t")
     if normalize and "text" in out.columns:
-        if os.environ.get("SPARK_GRAFT_NORM_ALL"):
-            out = out.withColumn("text", normalize_text_udf("text"))
-        else:
-            # Normalize ONLY rows whose state changed this batch: carried
-            # target rows were normalized when first written (normalization
-            # is idempotent, so re-running it is a provable no-op on them)
-            # — in a compaction batch they are the whole table, and pushing
-            # them through the Arrow boundary again was pure overhead. The
-            # UDF input is masked to NULL for unchanged rows, so only
-            # changed rows' bytes cross to Python (guide §4).
-            masked = normalize_text_udf(
-                F.when(F.col("_changed"), F.col("text"))
-            )
-            out = out.withColumn(
-                "text",
-                F.when(F.col("_changed"), masked).otherwise(F.col("text")),
-            )
+        # Normalize ONLY rows whose state changed this batch: carried
+        # target rows were normalized when first written (normalization
+        # is idempotent, so re-running it is a provable no-op on them)
+        # — in a compaction batch they are the whole table, and pushing
+        # them through the Arrow boundary again was pure overhead. The
+        # UDF input is masked to NULL for unchanged rows, so only
+        # changed rows' bytes cross to Python.
+        masked = normalize_text_udf(
+            F.when(F.col("_changed"), F.col("text"))
+        )
+        out = out.withColumn(
+            "text",
+            F.when(F.col("_changed"), masked).otherwise(F.col("text")),
+        )
     if config.redact_pii and "text" in out.columns:
         # after normalize, mirroring the oracle; idempotent like it
         from sfr_ingest_pipeline_spark.functions.pii import redact_pii
 
-        if os.environ.get("SPARK_GRAFT_NORM_ALL"):
-            out = out.withColumn("text", redact_pii("text"))
-        else:
-            out = out.withColumn(
-                "text",
-                F.when(F.col("_changed"), redact_pii(F.col("text")))
-                .otherwise(F.col("text")),
-            )
+        out = out.withColumn(
+            "text",
+            F.when(F.col("_changed"), redact_pii(F.col("text")))
+            .otherwise(F.col("text")),
+        )
     out = out.drop("_changed")
 
     commit_rel = f"data/snap-{table.next_commit_seq:08d}-{uuid.uuid4().hex[:8]}"
@@ -594,13 +584,12 @@ def apply_batch(
     # stacks 2-3 groups on others (guide §2.5) — the write stage then runs
     # at a fraction of the cores. 4x bins cut collisions; file layout is
     # unchanged (each group still lands wholly in one task).
-    wfactor = int(os.environ.get("SPARK_GRAFT_WFACTOR", "4"))
     writable = (
         out.withColumn(
             "_wsalt",
             F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_wsalt)),
         )
-        .repartition(len(touched) * n_wsalt * wfactor,
+        .repartition(len(touched) * n_wsalt * 4,
                      F.col("_bucket"), F.col("_wsalt"))
         # lead the sort with _bucket: satisfies the writer's dynamic-
         # partition ordering requirement, so FileFormatWriter does not

@@ -91,11 +91,6 @@ ARROW_EVENT_SCHEMA_V2 = ARROW_EVENT_SCHEMA.append(
 )
 
 
-def spark_to_ddl(schema: T.StructType) -> str:
-    """Render a StructType as a DDL string (stable, for snapshot metadata)."""
-    return schema.simpleString()
-
-
 # Lossless coercions of an INCOMING batch type into the table's declared
 # type (Iceberg's promotion set, read in the write direction): the writer
 # casts these silently.

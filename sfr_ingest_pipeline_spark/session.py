@@ -38,6 +38,14 @@ def _engine_zip() -> str:
     return out
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM, capped at 24g: the heap of a local session
+    grows toward its cap, and other JVMs (CLI runs, executors) must still
+    fit beside it."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(24, ram_gb // 2))}g"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "sfr-ingest-pipeline-spark",
@@ -81,7 +89,9 @@ def get_spark(
         builder = builder.config("spark.sql.files.minPartitionNum", str(cores))
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)
-    builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+    builder = builder.config(
+        "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem())
+    )
     # ParallelGC: G1 (the JDK17 default) is bimodal and can anti-scale 4x on
     # allocation-heavy string workloads with many task threads in one local
     # JVM (measured on this host: 23.2s vs 3.7s for the same regex scan at

@@ -1,7 +1,7 @@
 from sfr_ingest_pipeline_spark.sources.binlog import (
     BinlogSource,
     read_binlog,
-    read_binlog_stream,
+    tail_binlog_paths,
 )
 
-__all__ = ["BinlogSource", "read_binlog", "read_binlog_stream"]
+__all__ = ["BinlogSource", "read_binlog", "tail_binlog_paths"]

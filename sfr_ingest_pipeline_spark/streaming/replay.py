@@ -8,6 +8,18 @@ with the SAME batch_id, and ``apply_batch`` skips batch ids already recorded
 in the table's snapshot properties (SURVEY.md §4.4 — the one subtle corner:
 crash between snapshot commit and checkpoint write).
 
+A microbatch is built one way: the stream carries only the new segment
+files' paths (``sources.binlog.tail_binlog_paths``), and ``foreachBatch``
+collects them and reads the events with a native file scan
+(``sources.binlog.read_binlog``). The df Structured Streaming itself hands to
+foreachBatch is an ExistingRDD over the source's incremental plan: column
+pruning cannot cross that boundary, so every action on it would re-decode
+every column of the batch, and the MERGE runs two actions per batch (bucket
+discovery + the merge). The native scan prunes (discovery reads conv_id
+only) and fuses the decode into the downstream stage by whole-stage codegen.
+Row order within a batch is immaterial to the fused LWW aggregate (ties
+break on (ts, event_seq, src_rank), and event_seq is unique).
+
 Resume = same checkpointLocation + same table: offsets come from the
 checkpoint, sink state from the snapshot log; both are consulted, neither
 alone is transactional.
@@ -15,8 +27,6 @@ alone is transactional.
 
 from __future__ import annotations
 
-import json
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,7 +68,8 @@ def replay_stream(
     """
     from sfr_ingest_pipeline_spark.sources.binlog import (
         BinlogSource,
-        read_binlog_stream,
+        read_binlog,
+        tail_binlog_paths,
     )
     if not TranscriptTable.exists(table_root):
         logical = T.StructType(
@@ -80,81 +91,20 @@ def replay_stream(
     else:
         sources = [s if isinstance(s, BinlogSource) else BinlogSource(s, event_schema)
                    for s in binlog_dir]
-    events = read_binlog_stream(
+    new_files = tail_binlog_paths(
         spark, sources, max_files_per_trigger=max_files_per_trigger
     )
-    if config.source_dedup_horizon:
-        # transport-level dedup in front of the MERGE: drops exact
-        # redeliveries (same event_seq) within the watermark horizon before
-        # they cost shuffle bytes; converged state is identical with or
-        # without (the LWW MERGE absorbs duplicates exactly) — pinned by
-        # tests/test_streaming.py::test_source_dedup_converges_identically
-        from sfr_ingest_pipeline_spark.streaming.joins import (
-            dedup_within_watermark,
-        )
-
-        events = dedup_within_watermark(
-            events, id_cols=["event_seq"], ts_col="ts",
-            watermark_delay=config.source_dedup_horizon,
-        )
-
     results: list[MergeResult] = []
 
     class _InjectedCrash(RuntimeError):
         pass
 
-    # The df handed to foreachBatch is an ExistingRDD over the source's own
-    # incremental plan: every action on it re-decodes EVERY column of the
-    # batch parquet (column pruning cannot cross an RDD boundary), and the
-    # MERGE runs two actions per batch (bucket discovery + the merge). When
-    # the batch is a plain file list with no transport transforms in front
-    # (no source_dedup_horizon watermark dedup), rebuilding the batch from
-    # the checkpoint's per-source file log as a NATIVE parquet scan restores
-    # column pruning (discovery reads conv_id only) and fuses the decode
-    # into the downstream stage by whole-stage codegen (guide §6 / §2.3 —
-    # project before the exchange; measured on the 8.4M-event replay, the
-    # discovery job's task time drops ~8x). Exact same files -> exact same
-    # rows; order within the batch is immaterial to the fused LWW agg
-    # (ties break on (ts, event_seq, src_rank), and event_seq is unique).
-    def _native_batch(batch_id: int) -> DataFrame | None:
-        if os.environ.get("SPARK_GRAFT_NO_NATIVE_BATCH"):
-            return None  # A/B escape hatch (measurement)
-        if config.source_dedup_horizon:
-            return None  # batch_df carries the watermark dedup — keep it
-        per_source = []
-        for i, s in enumerate(sources):
-            log = os.path.join(checkpoint_dir, "sources", str(i), str(batch_id))
-            try:
-                with open(log) as f:
-                    if f.readline().strip() != "v1":
-                        return None
-                    paths = [json.loads(x)["path"] for x in f if x.strip()]
-            except OSError:
-                return None
-            per_source.append(paths)
-        dfs = []
-        for s, paths in zip(sources, per_source):
-            if not paths:
-                continue
-            reader = spark.read.schema(s.schema)
-            # json() takes one path-or-list (extra positionals would bind to
-            # its schema parameter); parquet() is variadic
-            dfs.append(
-                reader.json(list(paths)) if s.format == "jsonl"
-                else reader.parquet(*paths)
-            )
-        if not dfs:
-            return None  # empty batch: the streaming df is already empty
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
-
-    def _apply(df: DataFrame, batch_id: int) -> None:
-        native = _native_batch(batch_id)
-        if native is not None:
-            df = native
-        res = apply_batch(spark, table_root, df, batch_id, config=config)
+    def _apply(files: DataFrame, batch_id: int) -> None:
+        paths: list[list[str]] = [[] for _ in sources]
+        for row in files.collect():
+            paths[row.source].append(row.path)
+        events = read_binlog(spark, sources, paths)
+        res = apply_batch(spark, table_root, events, batch_id, config=config)
         results.append(res)
         if on_batch is not None:
             on_batch(res)
@@ -162,7 +112,7 @@ def replay_stream(
             raise _InjectedCrash(f"injected crash after commit of batch {batch_id}")
 
     writer = (
-        events.writeStream.foreachBatch(_apply)
+        new_files.writeStream.foreachBatch(_apply)
         .option("checkpointLocation", checkpoint_dir)
         .queryName("cdc-replay")
     )

@@ -15,7 +15,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 def spark():
     from sfr_ingest_pipeline_spark.session import get_spark
 
-    s = get_spark(master="local[8]", app_name="engine-tests")
+    s = get_spark(app_name="engine-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -116,58 +116,62 @@ def test_schema_evolution_mid_replay(spark, tmp_path, binlog_evolving, small_cfg
     assert got["tool_meta"].isna().any()
 
 
-def test_source_dedup_converges_identically(spark, tmp_path, binlog_basic, small_cfg):
-    """config.source_dedup_horizon puts dropDuplicatesWithinWatermark in
-    front of the MERGE: converged state must be IDENTICAL with and without
-    (the LWW merge absorbs redeliveries exactly either way); the dedup only
-    moves where duplicates die — fewer rows reach the merge."""
-    from dataclasses import replace as dc_replace
+def test_two_source_replay_matches_sequential_oracle(spark, tmp_path, small_cfg):
+    """Each microbatch is read natively from the segment paths the stream
+    delivered. Over the stream's own grouping (one file per source per
+    batch), the converged table and every per-batch counter must equal the
+    sequential oracle's. The grouping crosses Spark's compacted source log
+    (batch 9 is logged as ``9.compact``); one segment's name carries a space
+    and glob metacharacters; feed B has 3 segments to feed A's 11, so
+    batches 3-10 carry feed A only yet keep B's wider schema (tool_meta)."""
+    import os
 
-    binlog, _ = binlog_basic
-    plain_root = str(tmp_path / "t_plain")
-    dedup_root = str(tmp_path / "t_dedup")
-    r_plain = replay_stream(
-        spark, binlog, plain_root, str(tmp_path / "ck_p"),
-        config=small_cfg, max_files_per_trigger=2,
+    from sfr_ingest_pipeline_spark.generator import BinlogGenerator, GeneratorSpec
+    from sfr_ingest_pipeline_spark.oracle import simulate_replay
+    from sfr_ingest_pipeline_spark.schema import CHANGE_EVENT_SCHEMA_V2
+    from sfr_ingest_pipeline_spark.sources.binlog import BinlogSource
+
+    def feed(name, n_segments, **spec):
+        d = str(tmp_path / name)
+        BinlogGenerator(GeneratorSpec(
+            n_events=60 * n_segments, n_segments=n_segments, n_conversations=25,
+            delete_ratio=0.08, duplicate_ratio=0.08, late_ratio=0.08,
+            ts_tie_ratio=0.1, **spec,
+        )).write_binlog(d)
+        segs = [os.path.join(d, f) for f in sorted(os.listdir(d))]
+        # the file source orders a trigger's files by modification time
+        for i, p in enumerate(segs):
+            os.utime(p, (1_000_000 + i, 1_000_000 + i))
+        return d, [pd.read_parquet(p) for p in segs]
+
+    a, a_segs = feed("feed_a", 11, seed=31)
+    os.rename(os.path.join(a, "segment-000004.parquet"),
+              os.path.join(a, "segment-000004 [x]{1}.parquet"))
+    # same conversations, disjoint event_seq range: B's rows interleave with
+    # and conflict against A's
+    b, b_segs = feed("feed_b", 3, seed=32, seq_offset=10_000_000,
+                     schema_v2_from_segment=0)
+
+    root = str(tmp_path / "table")
+    results = replay_stream(
+        spark, [BinlogSource(a), BinlogSource(b, CHANGE_EVENT_SCHEMA_V2)],
+        root, str(tmp_path / "ckpt"), config=small_cfg,
+        event_schema=CHANGE_EVENT_SCHEMA_V2, max_files_per_trigger=1,
     )
-    cfg = dc_replace(small_cfg, source_dedup_horizon="10 minutes")
-    r_dedup = replay_stream(
-        spark, binlog, dedup_root, str(tmp_path / "ck_d"),
-        config=cfg, max_files_per_trigger=2,
+    assert os.path.exists(tmp_path / "ckpt" / "sources" / "0" / "9.compact")
+
+    batches = [
+        pd.concat(a_segs[i:i + 1] + b_segs[i:i + 1], ignore_index=True)
+        for i in range(len(a_segs))
+    ]
+    sim = simulate_replay(batches)
+    assert [(r.batch_id, r.rows_in, r.dedup_dropped, r.events_applied,
+             r.merge_conflicts) for r in results] == [
+        (c.batch_id, c.rows_in, c.dedup_dropped, c.events_applied,
+         c.merge_conflicts) for c in sim.counters
+    ]
+    assert sum(c.merge_conflicts for c in sim.counters) > 0
+    cols = LOGICAL_COLS + ["tool_meta"]
+    pd.testing.assert_frame_equal(
+        _table_pandas(spark, root)[cols], sim.table[cols], check_dtype=False
     )
-    a = TranscriptTable.load(plain_root).scan(spark)
-    b = TranscriptTable.load(dedup_root).scan(spark)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # transport dupes died upstream of the merge
-    assert sum(r.rows_in for r in r_dedup) < sum(r.rows_in for r in r_plain)
-    assert sum(r.events_applied for r in r_dedup) == sum(
-        r.events_applied for r in r_plain
-    )
-
-
-def test_native_batch_rebuild_equals_streaming_df(
-    spark, tmp_path, binlog_basic, small_cfg, monkeypatch
-):
-    """Round-6 optimization: when a microbatch is a plain file list (no
-    watermark dedup in front), the replay rebuilds it from the checkpoint's
-    per-source file log as a native parquet scan (column pruning + codegen)
-    instead of acting on the foreachBatch ExistingRDD. The converged table
-    and every per-batch counter must be identical either way."""
-    binlog, _ = binlog_basic
-
-    def run(tag, env):
-        if env:
-            monkeypatch.setenv("SPARK_GRAFT_NO_NATIVE_BATCH", "1")
-        else:
-            monkeypatch.delenv("SPARK_GRAFT_NO_NATIVE_BATCH", raising=False)
-        root = str(tmp_path / f"table_{tag}")
-        results = replay_stream(
-            spark, binlog, root, str(tmp_path / f"ckpt_{tag}"),
-            config=small_cfg, max_files_per_trigger=2,
-        )
-        return _table_pandas(spark, root), [r.counters() for r in results]
-
-    got_native, counters_native = run("native", env=False)
-    got_rdd, counters_rdd = run("rdd", env=True)
-    assert counters_native == counters_rdd
-    pd.testing.assert_frame_equal(got_native, got_rdd)
