@@ -7,7 +7,8 @@ SURVEY.md §0.2/§2) as:
   binlog/WAL-style change-event tail (Structured Streaming file source)
     -> Arrow-vectorized text normalization (pandas UDF, no per-row Python)
     -> salted two-phase last-writer-wins reduce by (ts, event_seq)
-    -> copy-on-write MERGE into an Iceberg-style snapshot-log Parquet table
+    -> merge-on-read MERGE (delta appends, per-bucket compaction) into an
+       Iceberg-style snapshot-log Parquet table
        keyed on (conv_id, turn_idx)
     -> exactly-once via idempotent batch-id markers in snapshot properties
     -> per-partition lineage + per-microbatch counters

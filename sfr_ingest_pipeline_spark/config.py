@@ -18,8 +18,8 @@ class EngineConfig:
     ----------
     n_buckets:
         Number of hash buckets the transcripts table is clustered into by
-        ``pmod(xxhash64(conv_id), n_buckets)``. MERGE only reads/rewrites
-        buckets touched by a microbatch (copy-on-write file pruning). At
+        ``pmod(xxhash64(conv_id), n_buckets)``. MERGE only reads/writes
+        buckets touched by a microbatch (bucket file pruning). At
         100 TB raise this so each bucket's live data is ~128-512 MB
         (e.g. 2^14 buckets); locally 16 keeps file counts small.
     n_salt:
@@ -40,13 +40,23 @@ class EngineConfig:
 
     n_buckets: int = 16
     n_salt: int = 8
-    # "cow": every touched bucket is fully rewritten per batch (simple reads,
-    #        O(touched table data) writes).
-    # "mor": only the batch's winners are APPENDED as per-bucket delta files
-    #        (O(batch) writes); readers LWW-reduce base+deltas; a bucket is
-    #        compacted back to a base file once it accumulates
-    #        `compact_delta_files` deltas. At 10^10 events mor is the only
-    #        sane mode — cow write amplification grows with table size.
+    # One write path with a compaction threshold: a touched bucket gets its
+    # changed rows APPENDED as a delta file (O(batch) writes; readers
+    # LWW-reduce base+deltas) until it holds the threshold of delta
+    # commits, and is then compacted back to a base file in the same job.
+    # "mor": the threshold is `compact_delta_files`.
+    # "cow": the threshold is 0, so every touched bucket is rewritten every
+    #        batch (O(touched table data) writes). It is mor compacting
+    #        every batch, with files outside the batch's conv_id ranges
+    #        carried forward unread.
+    # "cow" stays the default (the library and the CLI's `replay`) because
+    # it keeps a table delta-free, so reads skip the base+delta LWW resolve.
+    # Measured with scripts/cow_mor_read_bench.py (8 batches of 20k events
+    # over 2k conversations, 16 buckets, 4 cores): a full scan took 0.15 s
+    # on the cow table vs 0.81 s with 8 deltas per bucket, a point read
+    # 0.10 s vs 0.17 s, for about 1.5x the write time (BENCH/SUSTAINED.md).
+    # Ingest at scale sets "mor", as bench.py and perfbench do: at 10^10
+    # events cow write amplification grows with table size.
     merge_mode: str = "cow"
     # "row": whole-row LWW — the (ts, event_seq) winner's payload replaces
     #        the row, nulls included (BASELINE.json's normative rule).

@@ -1,7 +1,7 @@
-"""Copy-on-write MERGE INTO — the engine's flagship operator (SURVEY.md §2.11).
+"""Merge-on-read MERGE INTO — the engine's flagship operator (SURVEY.md §2.11).
 
 ``MERGE INTO`` needs a v2 row-level-op catalog that this sandbox lacks
-(SURVEY.md §0.4), so the engine implements Iceberg CoW MERGE semantics as
+(SURVEY.md §0.4), so the engine implements Iceberg MERGE semantics as
 DataFrame algebra inside ``foreachBatch``:
 
     MERGE INTO target t USING batch_lww s
@@ -22,7 +22,7 @@ Physical strategy — *fused* LWW + MERGE (one wide shuffle, not four):
       -> winner rows + counters via Observation (zero extra passes)
       -> normalize text (Arrow pandas UDF; idempotent, so re-normalizing
          carried-forward target rows is a no-op by construction)
-      -> repartition by bucket -> rewrite touched buckets -> atomic commit
+      -> bucketed write (TranscriptTable.write_bucketed) -> atomic commit
 
 Why this shape at 100 TB:
   * within-batch duplicate storms (hot keys) collapse in the MAP-SIDE partial
@@ -34,14 +34,16 @@ Why this shape at 100 TB:
     src_rank makes target rows win (ts, event_seq) ties so cross-batch
     re-deliveries count as conflicts, never double-apply;
   * the pandas UDF sees only O(keys) winner rows, not O(events) raw rows;
-  * file pruning: only buckets named by the batch's conv_ids are read and
-    rewritten; untouched files are carried forward by manifest reference;
-  * two write modes (config.merge_mode): "cow" rewrites every touched bucket
-    (simple reads), "mor" appends ONLY the batch winners as per-bucket delta
-    files — O(batch) writes — and compacts a bucket back to base form after
-    compact_delta_files deltas; readers LWW-reduce base+deltas. The fused
-    aggregation is mode-agnostic: multi-version target rows entering the
-    union resolve to current state by the same max_by;
+  * file pruning: only buckets named by the batch's conv_ids are read;
+    untouched files are carried forward by manifest reference;
+  * one write path: a touched bucket either gets its changed rows appended
+    as a delta file — O(batch) writes — or, once it holds a threshold of
+    delta commits, is compacted back to base form in the same write job;
+    readers LWW-reduce base+deltas. config.merge_mode only sets that
+    threshold: "mor" uses compact_delta_files, "cow" is the threshold 0
+    (every touched bucket rewritten every batch). The fused aggregation
+    is layout-agnostic: multi-version target rows entering the union
+    resolve to current state by the same max_by;
   * two MERGE semantics (config.column_merge): "row" replaces the whole row
     with the LWW winner's payload; "coalesce" is the reference's field-level
     LWW (update-if-non-null per column, SURVEY.md §3.1 E2) via the
@@ -372,34 +374,31 @@ def apply_batch(
             elapsed_sec=time.time() - t0,
         )
 
-    # ---- write-mode decision (metadata only; needed before the scan) ------
-    # cow: every touched bucket fully rewritten (keep + upsert + tombstones).
-    # mor: only batch winners append as delta files; buckets with >=
-    #      compact_delta_files delta commits compact back to base this pass.
-    if config.merge_mode == "mor":
-        delta_counts = table.delta_file_counts(set(touched))
-        compact = {
-            b for b in touched
-            if delta_counts.get(b, 0) >= config.compact_delta_files
-        }
-        replace_buckets = compact
-    else:
-        compact = set(touched)
-        replace_buckets = set(touched)
+    # ---- compaction decision (metadata only; needed before the scan) -----
+    # A touched bucket is compacted (rewritten to base form) once it holds
+    # `threshold` delta commits; every other touched bucket gets only its
+    # changed rows appended as a delta. "cow" is the threshold 0: every
+    # touched bucket is rewritten every batch.
+    threshold = 0 if config.merge_mode == "cow" else config.compact_delta_files
+    delta_counts = table.delta_file_counts(set(touched))
+    compact = {b for b in touched if delta_counts.get(b, 0) >= threshold}
 
     # ---- target side: bucket- AND conv_id-range-pruned scan ----------------
     # within a touched bucket, a file whose (conv_id_min, conv_id_max) range
     # does not intersect the batch's range for that bucket contains NO batch
     # key: it cannot change any winner or counter, so it is not read. If its
-    # bucket is being rewritten (CoW / compaction) the unread file is carried
-    # forward by reference — exact, because its conversations are disjoint
-    # from the rewrite's by the same range test. Compaction buckets skip
-    # pruning so the compacted base really is the whole bucket.
+    # bucket is being compacted the unread file is carried forward by
+    # reference — exact, because its conversations are disjoint from the
+    # rewrite's by the same range test. A compacted bucket that holds any
+    # delta file is read in full instead: the compacted base must fold
+    # every stored version, or a carried-forward delta would lose the
+    # commit-recency tie-break to the rewritten base (a coalesce stale fill
+    # keeps its (ts, event_seq), so recency is all that orders them).
     # (Pruning pays off when conv_ids cluster — e.g. time-prefixed ids with
     # update-recent workloads, or MoR delta files from conv-localized
     # batches; uniform-random batches touch every file and prune nothing.)
     bucket_files = table.files_in_buckets(set(touched))
-    no_prune = compact if config.merge_mode == "mor" else set()
+    no_prune = {b for b in compact if delta_counts.get(b, 0) > 0}
 
     # Bloom point-probe (table/bloom.py): when the batch's distinct conv
     # set is small (point corrections, conv-localized late events), collect
@@ -437,12 +436,12 @@ def apply_batch(
             read_files.append(f)
         else:
             carried.append(f)
-    carry_paths = {f.path for f in carried if f.bucket in replace_buckets}
+    carry_paths = {f.path for f in carried if f.bucket in compact}
 
-    # Row-mode MoR payload pruning (round 6, guide §8: shuffle a lightweight
-    # proxy, not the payload): a target row in a NON-compact bucket can only
-    # ever (a) win its key — then the row is unchanged and never written —
-    # or (b) lose to a batch row — then the written payload is the batch
+    # Row-mode payload pruning (guide §8: shuffle a lightweight proxy, not
+    # the payload): a target row in a NON-compact bucket can only ever
+    # (a) win its key — then the row is unchanged and never written — or
+    # (b) lose to a batch row — then the written payload is the batch
     # row's. Either way its payload columns never reach the output, so
     # those files are scanned metadata-only (keys + order cols + _deleted +
     # _del_hw) with payload as typed nulls: parquet column pruning skips
@@ -450,8 +449,7 @@ def apply_batch(
     # every delta-append batch. Compact buckets (full bucket rewrite) and
     # coalesce mode (stored column values can fill into written rows) keep
     # the full scan.
-    meta_keep = set(key_cols) | set(order_cols) | {"_deleted", "_del_hw"}
-    prune_ok = config.merge_mode == "mor" and config.column_merge != "coalesce"
+    prune_ok = config.column_merge != "coalesce"
     full_files = [f for f in read_files if not prune_ok or f.bucket in compact]
     meta_files = [f for f in read_files if prune_ok and f.bucket not in compact]
     branches = []
@@ -463,13 +461,13 @@ def apply_batch(
             table.scan(spark, with_meta=True, files=full_files), phys
         ).select(*phys_cols))
     if meta_files:
-        branches.append(table.scan(spark, with_meta=True, files=meta_files).select(*[
-            # cast: a same-batch widening may have widened a key/order col
-            # (table -> phys is always a widening, so the cast is lossless)
-            F.col(f.name).cast(f.dataType).alias(f.name) if f.name in meta_keep
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in phys.fields
-        ]))
+        meta_keep = [c for c in phys_cols
+                     if c in key_cols or c in order_cols
+                     or c in ("_deleted", "_del_hw")]
+        branches.append(_null_fill(
+            table.scan(spark, with_meta=True, files=meta_files).select(*meta_keep),
+            phys,
+        ))
     target = branches[0]
     for b in branches[1:]:
         target = target.unionByName(b)
@@ -531,21 +529,14 @@ def apply_batch(
     resolved_raw = resolved
     resolved = resolved.observe(obs_m, *counter_aggs)
 
-    out = resolved.withColumn(
-        "_bucket", bucket_expr(F.col("conv_id"), table.n_buckets)
-    )
-
-    # ---- apply the write mode (CoW rewrite vs MoR delta append) ------------
-    # mor: only batch winners (_src_rank == 0) are written for non-compact
-    # buckets; compact buckets keep every resolved row (full bucket state).
-    # ONE write job either way — the kind is per-bucket at harvest time.
-    if config.merge_mode == "mor":
-        keep_filter = F.col("_bucket").isin([int(b) for b in compact]) | (
-            F.col("_changed")
-        )
-        out = out.filter(keep_filter)
-
-    out = out.drop("_src_rank", "_n_s", "_has_t")
+    # ---- keep what each bucket persists -----------------------------------
+    # a compacted bucket keeps every resolved row (its full state); a delta
+    # bucket appends only the rows whose state changed. ONE write job
+    # either way — the file kind is per bucket at harvest time.
+    out = resolved.filter(
+        bucket_expr(F.col("conv_id"), table.n_buckets).isin(sorted(compact))
+        | F.col("_changed")
+    ).drop("_src_rank", "_n_s", "_has_t")
     if normalize and "text" in out.columns:
         # Normalize ONLY rows whose state changed this batch: carried
         # target rows were normalized when first written (normalization
@@ -572,62 +563,36 @@ def apply_batch(
         )
     out = out.drop("_changed")
 
-    commit_rel = f"data/snap-{table.next_commit_seq:08d}-{uuid.uuid4().hex[:8]}"
-    out_dir = f"{table.root}/{commit_rel}"
-    if config.merge_mode == "mor" and not compact:
-        # pure delta append: output is O(batch winners) — one file per bucket
-        n_wsalt = 1
-    else:
-        n_wsalt = max(1, min(8, config.shuffle_partitions // max(1, len(touched))))
-    # spread the (bucket, wsalt) groups over more bins than groups: hashing
-    # G groups into exactly G partitions leaves ~1/e of tasks empty and
-    # stacks 2-3 groups on others (guide §2.5) — the write stage then runs
-    # at a fraction of the cores. 4x bins cut collisions; file layout is
-    # unchanged (each group still lands wholly in one task).
-    writable = (
-        out.withColumn(
-            "_wsalt",
-            F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_wsalt)),
-        )
-        .repartition(len(touched) * n_wsalt * 4,
-                     F.col("_bucket"), F.col("_wsalt"))
-        # lead the sort with _bucket: satisfies the writer's dynamic-
-        # partition ordering requirement, so FileFormatWriter does not
-        # insert its own sort on top — one sort instead of two, same file
-        # contents (the old bucket re-sort was stable over key order)
-        .sortWithinPartitions("_bucket", *key_cols)
-        .drop("_wsalt")
-    )
     sc.setJobDescription(
         f"merge[{batch_id}]: fused LWW merge + write "
         f"({len(touched)} buckets, {len(compact)} compact)"
     )
-    writable.write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
+    # 4 bins per (bucket, wsalt) group: hashing G groups into exactly G
+    # tasks leaves ~1/e of them empty and stacks 2-3 groups on others
+    # (guide §2.5), so the write stage would run at a fraction of the cores
+    new_files = table.write_bucketed(
+        out, "snap", config, touched, compact, bins_per_group=4
+    )
     sc.setJobDescription(None)
 
     try:
         metrics = obs_m.get
     except Exception:
-        # When a MoR batch's entire output is empty (every batch row lost to
-        # the target), AQE replaces the empty write subtree and the
-        # CollectMetrics node never reports — Observation.get then fails on
-        # a schemaless row. Recompute the counters with a dedicated pass;
-        # this only ever runs for batches that changed nothing.
+        # When a batch's entire output is empty (every batch row lost to
+        # the target in delta-only buckets), AQE replaces the empty write
+        # subtree and the CollectMetrics node never reports —
+        # Observation.get then fails on a schemaless row. Recompute the
+        # counters with a dedicated pass; this only ever runs for batches
+        # that changed nothing.
         metrics = resolved_raw.agg(*counter_aggs).collect()[0].asDict()
     applied = int(metrics["applied"] or 0)
     conflicts = int(metrics["conflicts"] or 0)
     dedup_dropped = int(metrics["dedup"] or 0)
 
-    new_files = table.harvest_files(
-        commit_rel,
-        kind_for_bucket=lambda b: "base" if b in compact else "delta",
-        bloom_fpp=config.file_bloom_fpp,
-    )
-    lineage = _lineage(table, set(touched), replace_buckets, new_files,
-                       carry_paths)
+    lineage = _lineage(table, set(touched), compact, new_files, carry_paths)
     new_table, was_skipped = _commit_or_skip(
         table, batch_id,
-        replace_buckets,
+        compact,
         new_files,
         _props(batch_id, rows_in, dedup_dropped, applied, conflicts, lineage,
                quarantined=quarantined),

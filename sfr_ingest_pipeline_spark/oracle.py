@@ -50,6 +50,16 @@ def _union_segments(segments: list[pd.DataFrame]) -> pd.DataFrame:
     return pd.concat(segments, ignore_index=True, sort=False)
 
 
+def _none_for_missing(df: pd.DataFrame) -> pd.DataFrame:
+    """Object columns carry None, never NaN, for a missing value — the
+    null a Spark ``toPandas`` of a string column yields. NaN comes in from
+    rows or segments that predate an evolved column (``tool_meta``)."""
+    for c in df.columns:
+        if df[c].dtype == object:
+            df[c] = df[c].where(df[c].notna(), None)
+    return df
+
+
 def _extra_payload_cols(df: pd.DataFrame) -> list[str]:
     base = {"op", "conv_id", "turn_idx", "role", "text", "tool", "ts", "event_seq"}
     return [c for c in df.columns if c not in base]
@@ -70,7 +80,7 @@ def reduce_binlog(
         winners["text"] = normalize_text_pandas(winners["text"].astype("object"))
     cols = LOGICAL_COLS + _extra_payload_cols(ev)
     out = winners[[c for c in cols if c in winners.columns]]
-    return (
+    return _none_for_missing(
         out.sort_values(["conv_id", "turn_idx"], kind="mergesort")
         .reset_index(drop=True)
     )
@@ -216,7 +226,7 @@ def simulate_replay(
     table = table[cols]
     if normalize and len(table):
         table["text"] = normalize_text_pandas(table["text"].astype("object"))
-    table = (
+    table = _none_for_missing(
         table.sort_values(["conv_id", "turn_idx"], kind="mergesort")
         .reset_index(drop=True)
     )

@@ -48,7 +48,6 @@ silently undo them.
 from __future__ import annotations
 
 import time
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,7 +57,6 @@ from sfr_ingest_pipeline_spark.config import DEFAULT_CONFIG, EngineConfig
 from sfr_ingest_pipeline_spark.table.transcript_table import (
     DataFileInfo,
     TranscriptTable,
-    bucket_expr,
     resolve_stored_versions,
 )
 
@@ -234,27 +232,12 @@ def _commit_delta(
     """Write ``out`` (physical-schema rows, one new version per key) as a
     MoR delta append and commit it as a DML snapshot: batch-id marker
     carried forward, ``dml`` property recorded, changelog-visible."""
-    key_cols = list(table.snapshot.key_cols)
-    commit_rel = (
-        f"data/dml-{table.next_commit_seq:08d}-{uuid.uuid4().hex[:8]}"
-    )
-    out = out.withColumn("_bucket", bucket_expr(F.col("conv_id"), table.n_buckets))
-    (
-        out.repartition(config.shuffle_partitions, F.col("_bucket"))
-        .sortWithinPartitions(*key_cols)
-        .write.partitionBy("_bucket").mode("overwrite")
-        .parquet(f"{table.root}/{commit_rel}")
-    )
-    new_files = table.harvest_files(commit_rel, kind_for_bucket="delta")
-    rows_matched = sum(f.rows for f in new_files)
+    new_files = table.write_bucketed(out, "dml", config, None, set())
     if not new_files:
-        # nothing matched: no commit — remove the empty write dir so the
-        # table tree stays exactly its manifests' closure
-        import shutil
-
-        shutil.rmtree(f"{table.root}/{commit_rel}", ignore_errors=True)
+        # nothing matched: no commit (the writer left no dir behind)
         return DmlResult(op, 0, False, None, files_read, files_pruned,
                          time.time() - t0)
+    rows_matched = sum(f.rows for f in new_files)
 
     props = dict(table.snapshot.properties)  # carry batch_id marker forward
     props.pop("maintenance", None)

@@ -11,7 +11,6 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +19,7 @@ from sfr_ingest_pipeline_spark.config import DEFAULT_CONFIG, EngineConfig
 from sfr_ingest_pipeline_spark.table.transcript_table import (
     TranscriptTable,
     bucket_expr,
+    commit_dir_rel,
     resolve_stored_versions,
 )
 
@@ -44,9 +44,8 @@ def compact(
         return table
 
     df = table.scan(spark, with_meta=True, buckets=buckets)
-    key_cols = list(table.snapshot.key_cols)
     resolved = resolve_stored_versions(
-        df, key_cols, table.snapshot.order_cols
+        df, list(table.snapshot.key_cols), table.snapshot.order_cols
     )
     if expire_tombstones_older_than_us is not None:
         keep = ~F.col("_deleted") | (
@@ -55,23 +54,7 @@ def compact(
         )
         resolved = resolved.filter(keep)
 
-    commit_rel = (
-        f"data/compact-{table.next_commit_seq:08d}-{uuid.uuid4().hex[:8]}"
-    )
-    out_dir = os.path.join(table.root, commit_rel)
-    n_wsalt = max(1, min(8, config.shuffle_partitions // max(1, len(buckets))))
-    (
-        resolved.withColumn("_bucket", bucket_expr(F.col("conv_id"), table.n_buckets))
-        .withColumn(
-            "_wsalt",
-            F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_wsalt)),
-        )
-        .repartition(len(buckets) * n_wsalt, F.col("_bucket"), F.col("_wsalt"))
-        .sortWithinPartitions(*key_cols)
-        .drop("_wsalt")
-        .write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
-    )
-    new_files = table.harvest_files(commit_rel, kind_for_bucket="base")
+    new_files = table.write_bucketed(resolved, "compact", config, buckets, buckets)
     props = dict(table.snapshot.properties)  # carry batch_id marker forward
     props["maintenance"] = {
         "op": "compact",
@@ -115,18 +98,7 @@ def compact_minor(
     resolved = resolve_stored_versions(
         df, list(table.snapshot.key_cols), table.snapshot.order_cols
     )
-    commit_rel = (
-        f"data/compact-{table.next_commit_seq:08d}-{uuid.uuid4().hex[:8]}"
-    )
-    out_dir = os.path.join(table.root, commit_rel)
-    key_cols = list(table.snapshot.key_cols)
-    (
-        resolved.withColumn("_bucket", bucket_expr(F.col("conv_id"), table.n_buckets))
-        .repartition(len(chosen), F.col("_bucket"))
-        .sortWithinPartitions(*key_cols)
-        .write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
-    )
-    new_files = table.harvest_files(commit_rel, kind_for_bucket="delta")
+    new_files = table.write_bucketed(resolved, "compact", config, chosen, set())
     props = dict(table.snapshot.properties)  # carry batch_id marker forward
     props["maintenance"] = {
         "op": "compact_minor",
@@ -495,10 +467,7 @@ def recluster(
         df, key_cols, table.snapshot.order_cols
     )
 
-    commit_rel = (
-        f"data/recluster-{table.next_commit_seq:08d}-{uuid.uuid4().hex[:8]}"
-    )
-    out_dir = os.path.join(table.root, commit_rel)
+    commit_rel = commit_dir_rel("recluster", table.next_commit_seq)
     clustered = resolved.withColumn(
         "_bucket", bucket_expr(F.col("conv_id"), table.n_buckets)
     )
@@ -541,8 +510,12 @@ def recluster(
             # slice, and slices across partitions are disjoint by construction
             n_parts, F.col("_bucket"), F.col("conv_id"),
         ).sortWithinPartitions(*key_cols)
-    clustered.write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
-    new_files = table.harvest_files(commit_rel, kind_for_bucket="base")
+    clustered.write.partitionBy("_bucket").mode("overwrite").parquet(
+        os.path.join(table.root, commit_rel)
+    )
+    new_files = table.harvest_files(
+        commit_rel, range(table.n_buckets), bloom_fpp=config.file_bloom_fpp
+    )
     props = dict(table.snapshot.properties)  # carry batch_id marker forward
     props["maintenance"] = {
         "op": "recluster",
@@ -574,28 +547,13 @@ def rebucket(
     old_buckets = set(range(table.n_buckets))
 
     df = table.scan(spark, with_meta=True)
-    key_cols = list(table.snapshot.key_cols)
     resolved = resolve_stored_versions(
-        df, key_cols, table.snapshot.order_cols
+        df, list(table.snapshot.key_cols), table.snapshot.order_cols
     )
-
-    commit_rel = (
-        f"data/rebucket-{table.next_commit_seq:08d}-{uuid.uuid4().hex[:8]}"
+    new_files = table.write_bucketed(
+        resolved, "rebucket", config, range(new_n_buckets),
+        range(new_n_buckets), n_buckets=new_n_buckets,
     )
-    out_dir = os.path.join(table.root, commit_rel)
-    n_wsalt = max(1, min(8, config.shuffle_partitions // max(1, new_n_buckets)))
-    (
-        resolved.withColumn("_bucket", bucket_expr(F.col("conv_id"), new_n_buckets))
-        .withColumn(
-            "_wsalt",
-            F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_wsalt)),
-        )
-        .repartition(new_n_buckets * n_wsalt, F.col("_bucket"), F.col("_wsalt"))
-        .sortWithinPartitions(*key_cols)
-        .drop("_wsalt")
-        .write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
-    )
-    new_files = table.harvest_files(commit_rel, kind_for_bucket="base")
     props = dict(table.snapshot.properties)  # carry batch_id marker forward
     props["maintenance"] = {
         "op": "rebucket",

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import asdict, dataclass, field
@@ -49,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sfr_ingest_pipeline_spark.config import EngineConfig
 from sfr_ingest_pipeline_spark.schema import TRANSCRIPT_SCHEMA
 
 META_COLS = ("event_seq", "_deleted", "_del_hw")
@@ -57,6 +59,19 @@ META_COLS = ("event_seq", "_deleted", "_del_hw")
 def bucket_expr(conv_col, n_buckets: int):
     """Bucket id for a conv_id column — the table's clustering transform."""
     return F.pmod(F.xxhash64(conv_col), F.lit(n_buckets)).cast("int")
+
+
+# Commit-dir prefixes: "snap" (apply_batch), "dml", and the maintenance
+# rewrites. commit_dir_rel mints the names and commit_seq_of parses them.
+COMMIT_OPS = ("snap", "compact", "recluster", "rebucket", "dml")
+
+
+def commit_dir_rel(op: str, seq: int) -> str:
+    """Table-relative data dir of a commit: ``data/<op>-<seq:08d>-<uuid8>``.
+    The uuid keeps concurrent or crashed writers from sharing a dir."""
+    if op not in COMMIT_OPS:
+        raise ValueError(f"unknown commit op {op!r}; expected one of {COMMIT_OPS}")
+    return f"data/{op}-{seq:08d}-{uuid.uuid4().hex[:8]}"
 
 
 def commit_seq_col():
@@ -82,7 +97,7 @@ def commit_seq_of(path_col):
     return F.coalesce(
         F.regexp_extract(
             path_col,
-            r"/(?:snap|compact|recluster|rebucket|dml)-(\d+)-[0-9a-f]+/", 1,
+            rf"/(?:{'|'.join(COMMIT_OPS)})-(\d+)-[0-9a-f]+/", 1,
         ).try_cast("long"),
         F.lit(0).cast("long"),
     )
@@ -167,7 +182,7 @@ class DataFileInfo:
     # whose footers carry no ts min/max
     ts_min_us: int | None = None
     ts_max_us: int | None = None
-    # "base": full bucket state (copy-on-write output / compaction output);
+    # "base": full bucket state (a compacting merge batch or maintenance);
     # "delta": merge-on-read append containing only that batch's winners —
     # readers LWW-reduce base+deltas per key (SURVEY.md §4.3)
     kind: str = "base"
@@ -743,8 +758,8 @@ class TranscriptTable:
         Incremental by construction: every key that changed was written by
         an INGEST commit in the range, so candidate keys come from the
         union of each ingest step's own added files (MoR deltas carry
-        exactly the batch winners; CoW rewrites contain their bucket's
-        keys) — maintenance rewrites (compact/recluster/rebucket) move
+        exactly the batch winners; compacting rewrites contain their
+        bucket's keys) — maintenance rewrites (compact/recluster/rebucket) move
         bytes without changing logical state and contribute NO candidates,
         so a compaction landing mid-range no longer inflates the scan to
         every key it rewrote. Old/new state then resolves restricted to
@@ -756,7 +771,7 @@ class TranscriptTable:
         ONE of the two snapshots: a key whose resolved state differs must
         have a version row in such a file on at least one side, so the
         fallback is exact too (and catches MoR rollbacks the added-only
-        rule would miss). CoW rewrites carry forward unchanged keys; the
+        rule would miss). Compacting rewrites carry unchanged keys; the
         old-vs-new null-safe payload compare drops them. Additive schema
         evolution between the snapshots null-fills the old side to the new
         logical schema.
@@ -1059,7 +1074,7 @@ class TranscriptTable:
                 0 if schema_json == cur.schema_json else 1
             )
             # Commit-seq floor propagation: the writer stamped its data dir
-            # with base.next_commit_seq (see the 5 writer sites). Record the
+            # with base.next_commit_seq (see commit_dir_rel). Record the
             # high-water mark when it exceeds the natural snapshot-id stamp
             # so later commits (incl. after CAS rebases) stamp above it and
             # commit recency stays monotone in commit order.
@@ -1201,13 +1216,66 @@ class TranscriptTable:
         self._advance_hint(snap.snapshot_id)
         return TranscriptTable(self.root, snap)
 
+    # ------------------------------------------------------- bucketed write
+    def write_bucketed(
+        self, df: DataFrame, op: str, config: EngineConfig, buckets,
+        base_buckets, *, n_buckets: int | None = None,
+        bins_per_group: int = 1,
+    ) -> list[DataFileInfo]:
+        """Write physical-schema rows as one commit's bucketed data files and
+        harvest them; an empty write leaves no dir behind. ``buckets`` are
+        the buckets ``df`` may hold, or None when the caller leaves them
+        unsized (DML, whose rows may land in any bucket). Files in
+        ``base_buckets`` are base files (full bucket state), all others are
+        deltas. ``n_buckets`` overrides the table's layout (rebucket).
+
+        A write with no base bucket, or to an unknown bucket set, puts each
+        bucket in one file. Otherwise rows are write-salted on the key into
+        ``min(8, shuffle_partitions // n)`` files per bucket so a rewrite
+        uses the cores. The (bucket, salt) groups hash into
+        ``bins_per_group`` times as many tasks (an unknown bucket set into
+        ``shuffle_partitions`` tasks); a group still lands wholly in one
+        task, so the bin count never changes the files. The
+        ``_bucket``-leading sort meets the partitioned writer's ordering
+        requirement, so it adds no sort."""
+        if buckets is None or not base_buckets:
+            n_wsalt = 1
+        else:
+            n_wsalt = max(1, min(8, config.shuffle_partitions // len(buckets)))
+        n_tasks = (config.shuffle_partitions if buckets is None
+                   else len(buckets) * n_wsalt * bins_per_group)
+        key_cols = list(self.snapshot.key_cols)
+        commit_rel = commit_dir_rel(op, self.next_commit_seq)
+        (
+            df.withColumn(
+                "_bucket",
+                bucket_expr(F.col("conv_id"), n_buckets or self.n_buckets),
+            )
+            .withColumn(
+                "_wsalt",
+                F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_wsalt)),
+            )
+            .repartition(n_tasks, F.col("_bucket"), F.col("_wsalt"))
+            .sortWithinPartitions("_bucket", *key_cols)
+            .drop("_wsalt")
+            .write.partitionBy("_bucket").mode("overwrite")
+            .parquet(os.path.join(self.root, commit_rel))
+        )
+        files = self.harvest_files(
+            commit_rel, base_buckets, bloom_fpp=config.file_bloom_fpp
+        )
+        if not files:
+            shutil.rmtree(os.path.join(self.root, commit_rel), ignore_errors=True)
+        return files
+
     # -------------------------------------------------------- file harvest
     def harvest_files(
-        self, commit_dir_rel: str, kind_for_bucket=None,
-        bloom_fpp: float | None = 0.01, bloom_max_bytes: int = 1 << 17,
+        self, commit_dir_rel: str, base_buckets, *,
+        bloom_fpp: float | None, bloom_max_bytes: int = 1 << 17,
     ) -> list[DataFileInfo]:
         """Collect DataFileInfo for files written under data/<commit_dir_rel>/
-        (layout: _bucket=K/part-*.parquet from a partitionBy write). Reads
+        (layout: _bucket=K/part-*.parquet from a partitionBy write), kind
+        "base" when K is in ``base_buckets`` and "delta" otherwise. Reads
         only parquet footers (row counts + conv_id min/max stats) plus the
         bit-packed _deleted chunk for an exact tombstone count.
 
@@ -1275,10 +1343,7 @@ class TranscriptTable:
                         pc.sum(pc.fill_null(dcol, False).cast("int64")).as_py() or 0
                     )
                 rel = os.path.relpath(full, self.root)
-                kind = (
-                    kind_for_bucket(bucket) if callable(kind_for_bucket)
-                    else (kind_for_bucket or "base")
-                )
+                kind = "base" if bucket in base_buckets else "delta"
                 bloom_entry = None
                 if (
                     bw is not None and conv_idx is not None and rows > 0

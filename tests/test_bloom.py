@@ -225,13 +225,17 @@ def test_old_manifests_without_blooms_still_read(spark, tmp_path, small_cfg):
     and point-merges fine; probing simply keeps every file."""
     from dataclasses import replace
 
+    from sfr_ingest_pipeline_spark.table.dml import update_where
+
     cfg = replace(small_cfg, file_bloom_fpp=None)
     root = str(tmp_path / "legacy")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     batch = [_ev("I", f"c{i}", 0, i) for i in range(20)]
     apply_batch(spark, root, spark.createDataFrame(pd.DataFrame(batch)),
                 batch_id=1, config=cfg)
+    update_where(spark, root, "conv_id = 'c5'", {"text": "'fixed'"}, config=cfg)
     t = TranscriptTable.load(root)
+    assert any(f.kind == "delta" for f in t.files)
     assert all(f.bloom_path is None for f in t.files)
     res = apply_batch(
         spark, root,

@@ -141,6 +141,35 @@ def test_mor_stale_fill_survives_commit_collision(spark, tmp_path):
     assert row2["tool"] == "sql" and row2["text"] == "body"
 
 
+def test_cow_batch_folds_range_disjoint_stale_fill_delta(spark, tmp_path):
+    """A CoW batch that rewrites a bucket holding a delta must fold the
+    delta, even one whose conv_id range misses the batch. Carried forward,
+    the stale-fill delta (same (ts, event_seq) as the base row) would lose
+    the commit-recency tie-break to the rewritten base row."""
+    from dataclasses import replace
+
+    # shuffle_partitions=1: one write salt, so a bucket rewrite is one file
+    cow = EngineConfig(n_buckets=1, n_salt=1, merge_mode="cow",
+                       column_merge="coalesce", shuffle_partitions=1)
+    mor = replace(cow, merge_mode="mor", compact_delta_files=100)
+    batches = [
+        pd.DataFrame([_ev("I", "c_a", 0, "user", "a", None, 100, 1),
+                      _ev("I", "c_m", 0, "user", "m", None, 100, 2)]),
+        pd.DataFrame([_ev("U", "c_m", 0, None, None, "sql", 50, 3)]),  # stale fill
+        pd.DataFrame([_ev("U", "c_a", 0, None, "a2", None, 200, 4)]),
+    ]
+    root = str(tmp_path / "cow_after_fill")
+    TranscriptTable.create(root, n_buckets=1)
+    results = []
+    for i, cfg in enumerate((cow, mor, cow)):
+        results.append(apply_batch(spark, root, spark.createDataFrame(batches[i]),
+                                   i, config=cfg))
+        if i == 0:  # c_a and c_m share one base file
+            assert len(TranscriptTable.load(root).files) == 1
+    _assert_matches_oracle(spark, root, results, batches)
+    assert {f.kind for f in TranscriptTable.load(root).files} == {"base"}
+
+
 @pytest.mark.parametrize("mode", ["cow", "mor"])
 def test_generated_partial_updates_match_oracle(spark, tmp_path, mode):
     """Generator-driven golden: 1500 events with 40% partial updates, dups,
