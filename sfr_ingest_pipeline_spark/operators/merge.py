@@ -567,12 +567,7 @@ def apply_batch(
         f"merge[{batch_id}]: fused LWW merge + write "
         f"({len(touched)} buckets, {len(compact)} compact)"
     )
-    # 4 bins per (bucket, wsalt) group: hashing G groups into exactly G
-    # tasks leaves ~1/e of them empty and stacks 2-3 groups on others
-    # (guide §2.5), so the write stage would run at a fraction of the cores
-    new_files = table.write_bucketed(
-        out, "snap", config, touched, compact, bins_per_group=4
-    )
+    new_files = table.write_bucketed(out, "snap", config, touched, compact)
     sc.setJobDescription(None)
 
     try:

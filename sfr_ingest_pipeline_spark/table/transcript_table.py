@@ -1220,7 +1220,6 @@ class TranscriptTable:
     def write_bucketed(
         self, df: DataFrame, op: str, config: EngineConfig, buckets,
         base_buckets, *, n_buckets: int | None = None,
-        bins_per_group: int = 1,
     ) -> list[DataFileInfo]:
         """Write physical-schema rows as one commit's bucketed data files and
         harvest them; an empty write leaves no dir behind. ``buckets`` are
@@ -1231,19 +1230,18 @@ class TranscriptTable:
 
         A write with no base bucket, or to an unknown bucket set, puts each
         bucket in one file. Otherwise rows are write-salted on the key into
-        ``min(8, shuffle_partitions // n)`` files per bucket so a rewrite
-        uses the cores. The (bucket, salt) groups hash into
-        ``bins_per_group`` times as many tasks (an unknown bucket set into
-        ``shuffle_partitions`` tasks); a group still lands wholly in one
-        task, so the bin count never changes the files. The
-        ``_bucket``-leading sort meets the partitioned writer's ordering
-        requirement, so it adds no sort."""
+        at most ``min(8, shuffle_partitions // n)`` files per bucket so a
+        rewrite uses the cores (two salt groups of a bucket that hash to
+        one task share a file). The groups hash into exactly
+        ``shuffle_partitions`` tasks whatever the bucket count, so the
+        write pays per-task overhead per core, not per group; a group lands
+        wholly in one task, so a bucket's rows and that bound never depend
+        on the task count. The ``_bucket``-leading sort meets the
+        partitioned writer's ordering requirement, so it adds no sort."""
         if buckets is None or not base_buckets:
             n_wsalt = 1
         else:
             n_wsalt = max(1, min(8, config.shuffle_partitions // len(buckets)))
-        n_tasks = (config.shuffle_partitions if buckets is None
-                   else len(buckets) * n_wsalt * bins_per_group)
         key_cols = list(self.snapshot.key_cols)
         commit_rel = commit_dir_rel(op, self.next_commit_seq)
         (
@@ -1255,7 +1253,9 @@ class TranscriptTable:
                 "_wsalt",
                 F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_wsalt)),
             )
-            .repartition(n_tasks, F.col("_bucket"), F.col("_wsalt"))
+            .repartition(
+                config.shuffle_partitions, F.col("_bucket"), F.col("_wsalt")
+            )
             .sortWithinPartitions("_bucket", *key_cols)
             .drop("_wsalt")
             .write.partitionBy("_bucket").mode("overwrite")

@@ -1,5 +1,6 @@
 """Merge-on-read mode: golden parity with CoW, delta append + compaction."""
 
+from collections import Counter
 from dataclasses import replace
 
 import pandas as pd
@@ -170,6 +171,53 @@ def test_target_payload_prune_equivalent(spark, tmp_path):
         (c.batch_id, c.rows_in, c.dedup_dropped, c.events_applied,
          c.merge_conflicts) for c in sim.counters
     ]
+    pd.testing.assert_frame_equal(
+        _table_pandas(spark, root)[LOGICAL_COLS], sim.table[LOGICAL_COLS],
+        check_dtype=False,
+    )
+
+
+@pytest.mark.parametrize("shuffle_partitions", [1, 4, 8])
+def test_written_files_do_not_depend_on_task_count(
+    spark, tmp_path, segments_basic, shuffle_partitions
+):
+    """The bucketed writer runs ``shuffle_partitions`` tasks, but the files
+    follow the bucket layout: every delta batch writes exactly one file per
+    bucket it writes, a compaction at most ``n_wsalt`` files per bucket, and
+    the table equals the sequential oracle either way."""
+    from sfr_ingest_pipeline_spark.config import EngineConfig
+    from sfr_ingest_pipeline_spark.table.maintenance import compact
+
+    cfg = EngineConfig(
+        n_buckets=2, n_salt=1, shuffle_partitions=shuffle_partitions,
+        merge_mode="mor", compact_delta_files=100,
+    )
+    root = str(tmp_path / "t")
+    TranscriptTable.create(root, n_buckets=cfg.n_buckets)
+
+    def written_by(op):
+        before = {f.path for f in TranscriptTable.load(root).files}
+        op()
+        return [f for f in TranscriptTable.load(root).files
+                if f.path not in before]
+
+    sim = simulate_replay(segments_basic)
+    for i, seg in enumerate(segments_basic):
+        written = written_by(lambda: apply_batch(
+            spark, root, spark.createDataFrame(seg), i, config=cfg))
+        assert written and {f.kind for f in written} == {"delta"}
+        assert set(Counter(f.bucket for f in written).values()) == {1}
+    pd.testing.assert_frame_equal(
+        _table_pandas(spark, root)[LOGICAL_COLS], sim.table[LOGICAL_COLS],
+        check_dtype=False,
+    )
+
+    written = written_by(lambda: compact(spark, root, config=cfg))
+    n_wsalt = max(1, min(8, shuffle_partitions // cfg.n_buckets))
+    counts = Counter(f.bucket for f in written)
+    assert {f.kind for f in written} == {"base"}
+    assert set(counts) == {0, 1}
+    assert max(counts.values()) <= n_wsalt
     pd.testing.assert_frame_equal(
         _table_pandas(spark, root)[LOGICAL_COLS], sim.table[LOGICAL_COLS],
         check_dtype=False,
