@@ -19,6 +19,7 @@ custom code lives outside the planner (table commit layer, file pruning,
 salting, exactly-once markers, schema evolution). See SURVEY.md §4.
 """
 
+from sfr_ingest_pipeline_spark import pyworker
 from sfr_ingest_pipeline_spark.config import EngineConfig
 from sfr_ingest_pipeline_spark.schema import (
     CHANGE_EVENT_SCHEMA,
@@ -27,6 +28,9 @@ from sfr_ingest_pipeline_spark.schema import (
 )
 
 __version__ = "0.1.0"
+
+# inside a Spark Python worker task: stop the per-task zip-directory re-read
+pyworker.install_in_spark_worker()
 
 __all__ = [
     "EngineConfig",

@@ -27,7 +27,12 @@ from pyspark.sql.types import StringType
 
 # C0 controls except \t (09) and \n (0A); DEL; C1 controls.
 _CONTROL_RE = r"[\x00-\x08\x0b-\x1f\x7f-\x9f]"
-_HSPACE_RE = r"[ \t]+"
+# Step 4 matches only the runs it changes: a run that starts with a tab,
+# or a space followed by more horizontal whitespace. A lone space already
+# is its own replacement, so skipping it keeps the output of ``[ \t]+``
+# byte for byte and halves the step's cost on prose, where most runs are
+# one space.
+_HSPACE_RE = r"\t[ \t]*| [ \t]+"
 
 
 def normalize_text_pandas(s: pd.Series) -> pd.Series:

@@ -20,9 +20,11 @@ Physical strategy — *fused* LWW + MERGE (one wide shuffle, not four):
              max_by(payload, (ts, event_seq, src_rank)),   # LWW winner;
              sum(src='s'), max(src='t'))                   # counter inputs
       -> winner rows + counters via Observation (zero extra passes)
-      -> normalize text (Arrow pandas UDF; idempotent, so re-normalizing
-         carried-forward target rows is a no-op by construction)
-      -> bucketed write (TranscriptTable.write_bucketed) -> atomic commit
+      -> write exchange to shuffle_partitions tasks
+         (TranscriptTable.write_bucketed), then IN each write task:
+         normalize text (Arrow pandas UDF), then redact_pii, on rows the
+         batch changed only — carried rows were finished when written
+      -> bucketed write -> atomic commit (records the text policy)
 
 Why this shape at 100 TB:
   * within-batch duplicate storms (hot keys) collapse in the MAP-SIDE partial
@@ -33,7 +35,9 @@ Why this shape at 100 TB:
     but needs ONE clustering of the data instead of two sorted sides;
     src_rank makes target rows win (ts, event_seq) ties so cross-batch
     re-deliveries count as conflicts, never double-apply;
-  * the pandas UDF sees only O(keys) winner rows, not O(events) raw rows;
+  * the pandas UDF sees only O(keys) changed winner rows, not O(events)
+    raw rows, and runs in every write task: the aggregate's reduce is
+    coalesced by AQE (one task for a small batch), the write is not;
   * file pruning: only buckets named by the batch's conv_ids are read;
     untouched files are carried forward by manifest reference;
   * one write path: a touched bucket either gets its changed rows appended
@@ -315,6 +319,14 @@ def apply_batch(
             f"differ from the table's recorded "
             f"{tuple(table.snapshot.key_cols)}/{tuple(table.snapshot.order_cols)}"
         )
+    # normalize/redact touch only the rows a batch changes (finish_text
+    # below), so one table keeps one text policy for its whole history
+    policy = {"normalize": bool(normalize), "redact_pii": bool(config.redact_pii)}
+    recorded = table.snapshot.properties.get("text_policy")
+    if recorded is not None and recorded != policy:
+        raise ValueError(
+            f"text policy {policy} differs from the table's recorded {recorded}"
+        )
 
     # ---- schema evolution (ALTER-on-write) --------------------------------
     incoming_logical = T.StructType(
@@ -363,7 +375,7 @@ def apply_batch(
         # empty batch: still commit the batch-id marker for idempotency
         new_table, was_skipped = _commit_or_skip(
             table, batch_id,
-            set(), [], _props(batch_id, rows_in, 0, 0, 0, {},
+            set(), [], _props(batch_id, rows_in, 0, 0, 0, {}, policy,
                               quarantined=quarantined),
             schema=logical if schema_changed else None,
         )
@@ -537,37 +549,38 @@ def apply_batch(
         bucket_expr(F.col("conv_id"), table.n_buckets).isin(sorted(compact))
         | F.col("_changed")
     ).drop("_src_rank", "_n_s", "_has_t")
-    if normalize and "text" in out.columns:
-        # Normalize ONLY rows whose state changed this batch: carried
-        # target rows were normalized when first written (normalization
-        # is idempotent, so re-running it is a provable no-op on them)
-        # — in a compaction batch they are the whole table, and pushing
-        # them through the Arrow boundary again was pure overhead. The
-        # UDF input is masked to NULL for unchanged rows, so only
-        # changed rows' bytes cross to Python.
-        masked = normalize_text_udf(
-            F.when(F.col("_changed"), F.col("text"))
-        )
-        out = out.withColumn(
-            "text",
-            F.when(F.col("_changed"), masked).otherwise(F.col("text")),
-        )
-    if config.redact_pii and "text" in out.columns:
-        # after normalize, mirroring the oracle; idempotent like it
-        from sfr_ingest_pipeline_spark.functions.pii import redact_pii
 
-        out = out.withColumn(
-            "text",
-            F.when(F.col("_changed"), redact_pii(F.col("text")))
-            .otherwise(F.col("text")),
-        )
-    out = out.drop("_changed")
+    def finish_text(df: DataFrame) -> DataFrame:
+        # Runs in the write tasks, after the write exchange, so the Python
+        # UDF uses all shuffle_partitions tasks (AQE coalesces the
+        # aggregate's reduce to one task for a small shuffle). Only rows
+        # the batch changed are normalized, then redacted (the oracle's
+        # order): carried rows were finished when first written, which is
+        # exact while the text policy stays put (checked above). The UDF
+        # input is masked to NULL for unchanged rows, so only changed
+        # rows' bytes cross to Python.
+        changed = F.col("_changed")
+        if normalize and "text" in df.columns:
+            masked = normalize_text_udf(F.when(changed, F.col("text")))
+            df = df.withColumn(
+                "text", F.when(changed, masked).otherwise(F.col("text"))
+            )
+        if config.redact_pii and "text" in df.columns:
+            from sfr_ingest_pipeline_spark.functions.pii import redact_pii
+
+            df = df.withColumn(
+                "text",
+                F.when(changed, redact_pii(F.col("text"))).otherwise(F.col("text")),
+            )
+        return df.drop("_changed")
 
     sc.setJobDescription(
         f"merge[{batch_id}]: fused LWW merge + write "
         f"({len(touched)} buckets, {len(compact)} compact)"
     )
-    new_files = table.write_bucketed(out, "snap", config, touched, compact)
+    new_files = table.write_bucketed(
+        out, "snap", config, touched, compact, project=finish_text
+    )
     sc.setJobDescription(None)
 
     try:
@@ -590,7 +603,7 @@ def apply_batch(
         compact,
         new_files,
         _props(batch_id, rows_in, dedup_dropped, applied, conflicts, lineage,
-               quarantined=quarantined),
+               policy, quarantined=quarantined),
         schema=logical if schema_changed else None,
         carry_files=carry_paths,
     )
@@ -609,9 +622,10 @@ def apply_batch(
 
 
 def _props(batch_id, rows_in, dedup_dropped, applied, conflicts, lineage,
-           quarantined=0):
+           policy, quarantined=0):
     return {
         "batch_id": batch_id,
+        "text_policy": policy,
         "counters": {
             "rows_in": rows_in,
             "dedup_dropped": dedup_dropped,

@@ -43,6 +43,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import asdict, dataclass, field
 
 import pyarrow.parquet as pq
@@ -1220,6 +1221,7 @@ class TranscriptTable:
     def write_bucketed(
         self, df: DataFrame, op: str, config: EngineConfig, buckets,
         base_buckets, *, n_buckets: int | None = None,
+        project: Callable[[DataFrame], DataFrame] | None = None,
     ) -> list[DataFileInfo]:
         """Write physical-schema rows as one commit's bucketed data files and
         harvest them; an empty write leaves no dir behind. ``buckets`` are
@@ -1230,34 +1232,41 @@ class TranscriptTable:
 
         A write with no base bucket, or to an unknown bucket set, puts each
         bucket in one file. Otherwise rows are write-salted on the key into
-        at most ``min(8, shuffle_partitions // n)`` files per bucket so a
-        rewrite uses the cores (two salt groups of a bucket that hash to
-        one task share a file). The groups hash into exactly
-        ``shuffle_partitions`` tasks whatever the bucket count, so the
-        write pays per-task overhead per core, not per group; a group lands
-        wholly in one task, so a bucket's rows and that bound never depend
-        on the task count. The ``_bucket``-leading sort meets the
-        partitioned writer's ordering requirement, so it adds no sort."""
+        ``n_wsalt = min(8, shuffle_partitions // n)`` groups per bucket so a
+        rewrite uses the cores. Each (bucket, salt) group has the dense id
+        ``bucket * n_wsalt + salt``, and the id modulo
+        ``shuffle_partitions`` is its task: the write runs exactly
+        ``shuffle_partitions`` tasks whatever the bucket count, so it pays
+        per-task overhead per core, not per group, and no two groups of a
+        bucket share a task (a bucket with non-empty salts writes exactly
+        ``n_wsalt`` files). A group lands wholly in one task, so a bucket's
+        rows never depend on the task count. With every bucket written,
+        each task holds ``floor(G / P)`` or ``ceil(G / P)`` of the ``G``
+        groups.
+
+        ``project`` is a DataFrame -> DataFrame projection applied in the
+        write tasks, after the exchange and before the sort: the merge runs
+        its normalize/redact UDFs there, on every write task instead of in
+        the aggregate's reduce. It must keep the physical columns and
+        ``_bucket``. The ``_bucket``-leading sort meets the partitioned
+        writer's ordering requirement, so it adds no sort."""
         if buckets is None or not base_buckets:
             n_wsalt = 1
         else:
             n_wsalt = max(1, min(8, config.shuffle_partitions // len(buckets)))
         key_cols = list(self.snapshot.key_cols)
         commit_rel = commit_dir_rel(op, self.next_commit_seq)
+        group = F.col("_bucket")
+        if n_wsalt > 1:
+            salt = F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_wsalt))
+            group = (group * n_wsalt + salt).cast("int")
+        placed = df.withColumn(
+            "_bucket", bucket_expr(F.col("conv_id"), n_buckets or self.n_buckets)
+        ).repartitionById(config.shuffle_partitions, group)
+        if project is not None:
+            placed = project(placed)
         (
-            df.withColumn(
-                "_bucket",
-                bucket_expr(F.col("conv_id"), n_buckets or self.n_buckets),
-            )
-            .withColumn(
-                "_wsalt",
-                F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_wsalt)),
-            )
-            .repartition(
-                config.shuffle_partitions, F.col("_bucket"), F.col("_wsalt")
-            )
-            .sortWithinPartitions("_bucket", *key_cols)
-            .drop("_wsalt")
+            placed.sortWithinPartitions("_bucket", *key_cols)
             .write.partitionBy("_bucket").mode("overwrite")
             .parquet(os.path.join(self.root, commit_rel))
         )

@@ -232,6 +232,38 @@ def test_config_key_order_cols_must_match_table(spark, tmp_path, small_cfg):
         apply_batch(spark, root, spark.createDataFrame(b), 0, config=bad)
 
 
+def test_text_policy_recorded_and_must_not_change(
+    spark, tmp_path, segments_basic, small_cfg
+):
+    """normalize/redact run only on rows a batch changes, so a table keeps
+    the policy its merge commits record; a batch with another one raises
+    before it writes. A table with no record takes the batch and records
+    its policy."""
+    from dataclasses import replace
+
+    root, _ = _apply_segments(spark, tmp_path, segments_basic[:2], small_cfg,
+                              "policy")
+    table = TranscriptTable.load(root)
+    assert table.snapshot.properties["text_policy"] == {
+        "normalize": True, "redact_pii": False,
+    }
+    seg = spark.createDataFrame(segments_basic[2])
+    redacting = replace(small_cfg, redact_pii=True)
+    with pytest.raises(ValueError, match="text policy"):
+        apply_batch(spark, root, seg, 2, config=redacting)
+    with pytest.raises(ValueError, match="text policy"):
+        apply_batch(spark, root, seg, 2, config=small_cfg, normalize=False)
+    assert TranscriptTable.load(root).snapshot == table.snapshot
+
+    props = dict(table.snapshot.properties)
+    del props["text_policy"]
+    table.commit(set(), [], props)
+    assert apply_batch(spark, root, seg, 2, config=redacting).committed
+    assert TranscriptTable.load(root).snapshot.properties["text_policy"] == {
+        "normalize": True, "redact_pii": True,
+    }
+
+
 def test_custom_order_cols_end_to_end(spark, tmp_path):
     """Non-default order_cols thread through physical_schema so the stored
     _del_hw delete memory carries (event_seq, ts) fields — the round-3

@@ -184,7 +184,9 @@ def test_written_files_do_not_depend_on_task_count(
     """The bucketed writer runs ``shuffle_partitions`` tasks, but the files
     follow the bucket layout: every delta batch writes exactly one file per
     bucket it writes, a compaction at most ``n_wsalt`` files per bucket, and
-    the table equals the sequential oracle either way."""
+    the table equals the sequential oracle either way. Groups are placed
+    by dense id, so no two salts of a bucket share a task: a compaction
+    writes exactly ``n_wsalt`` files per bucket."""
     from sfr_ingest_pipeline_spark.config import EngineConfig
     from sfr_ingest_pipeline_spark.table.maintenance import compact
 
@@ -218,6 +220,8 @@ def test_written_files_do_not_depend_on_task_count(
     assert {f.kind for f in written} == {"base"}
     assert set(counts) == {0, 1}
     assert max(counts.values()) <= n_wsalt
+    if shuffle_partitions == 4:
+        assert counts == {0: 2, 1: 2}
     pd.testing.assert_frame_equal(
         _table_pandas(spark, root)[LOGICAL_COLS], sim.table[LOGICAL_COLS],
         check_dtype=False,
