@@ -1,8 +1,8 @@
 """Read cost of a delta-free table against one holding MoR deltas.
 
-Writes the same batches twice, once with merge_mode="cow" (every touched
-bucket compacted every batch, so the table stays delta-free) and once with
-"mor" (deltas accumulate up to compact_delta_files), then times a full
+Writes the same batches twice, once as "cow" (compact_delta_files=0: every
+touched bucket compacted every batch, so the table stays delta-free) and
+once as "mor" (deltas accumulate up to compact_delta_files=8), then times a full
 logical scan and point reads on both. Every batch updates keys spread over
 the whole keyspace, so each bucket collects deltas.
 
@@ -43,7 +43,8 @@ def run_mode(spark, work: str, mode: str, segs: list[str], n_conv: int,
     from sfr_ingest_pipeline_spark.schema import CHANGE_EVENT_SCHEMA
     from sfr_ingest_pipeline_spark.table.transcript_table import TranscriptTable
 
-    cfg = EngineConfig(shuffle_partitions=os.cpu_count() or 4, merge_mode=mode)
+    cfg = EngineConfig(shuffle_partitions=os.cpu_count() or 4,
+                       compact_delta_files=0 if mode == "cow" else 8)
     root = os.path.join(work, mode)
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     write_s = 0.0

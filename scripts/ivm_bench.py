@@ -54,7 +54,7 @@ def main() -> int:
     work = tempfile.mkdtemp(prefix="ivm_bench_", dir=base)
     n_conversations = max(200, args.events // 50)
     cfg = EngineConfig(n_buckets=32, n_salt=1,
-                       shuffle_partitions=int(args.cpus), merge_mode="mor",
+                       shuffle_partitions=int(args.cpus),
                        compact_delta_files=1)
     spark = get_spark(
         master=f"local[{args.cpus}]", app_name="ivm_bench",

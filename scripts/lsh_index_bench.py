@@ -45,7 +45,7 @@ def main() -> int:
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    cfg = EngineConfig(merge_mode="mor")
+    cfg = EngineConfig(compact_delta_files=8)
     work = tempfile.mkdtemp(prefix="lshbench-")
     root = f"{work}/t"
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)

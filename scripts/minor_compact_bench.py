@@ -66,8 +66,7 @@ def main() -> int:
     blg2 = os.path.join(base, "binlog2")
     fast_binlog(blg2, n_events - bulk, n_segments=max(4, n_segments // 4),
                 n_conversations=n_convs, seed=6, zipf_s=1.05)
-    cfg = EngineConfig(merge_mode="mor", compact_delta_files=10**9,
-                       n_buckets=32)
+    cfg = EngineConfig(compact_delta_files=10**9, n_buckets=32)
     ta = os.path.join(base, "ta")
     ckpt = os.path.join(base, "ckpt")
     replay_stream(spark, blg1, ta, ckpt,

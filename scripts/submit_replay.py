@@ -20,7 +20,7 @@ def main() -> int:
     ap.add_argument("--binlog", required=True, action="append")
     ap.add_argument("--table", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--merge-mode", choices=["cow", "mor"], default="mor")
+    ap.add_argument("--compact-delta-files", type=int, default=8)
     ap.add_argument("--buckets", type=int, default=32)
     ap.add_argument("--salt", type=int, default=1)
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
@@ -36,7 +36,8 @@ def main() -> int:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     cfg = EngineConfig(
-        n_buckets=args.buckets, n_salt=args.salt, merge_mode=args.merge_mode
+        n_buckets=args.buckets, n_salt=args.salt,
+        compact_delta_files=args.compact_delta_files,
     )
     t0 = time.time()
     results = replay_stream(

@@ -35,7 +35,7 @@ def run_mode(spark, mode: str, n_batches: int, events_per_batch: int,
     work = tempfile.mkdtemp(prefix=f"sustained_{mode}_", dir=base if os.path.isdir(base) else None)
     cfg = EngineConfig(
         n_buckets=32, n_salt=8, shuffle_partitions=32,
-        merge_mode=mode, compact_delta_files=4,
+        compact_delta_files=0 if mode == "cow" else 4,
     )
     root = os.path.join(work, "table")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)

@@ -111,7 +111,6 @@ def cmd_replay(args) -> int:
         n_buckets=args.buckets,
         n_salt=args.salt,
         shuffle_partitions=args.shuffle_partitions or 32,
-        merge_mode=args.merge_mode,
         column_merge=args.column_merge,
         compact_delta_files=args.compact_delta_files,
         quarantine_dir=args.quarantine_dir,
@@ -792,11 +791,12 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--checkpoint", required=True)
     r.add_argument("--buckets", type=int, default=16)
     r.add_argument("--salt", type=int, default=8)
-    r.add_argument("--merge-mode", choices=["cow", "mor"], default="cow")
     r.add_argument("--column-merge", choices=["row", "coalesce"], default="row",
                    help="row: whole-row LWW; coalesce: field-level LWW "
                         "(partial updates only touch carried columns)")
-    r.add_argument("--compact-delta-files", type=int, default=8)
+    r.add_argument("--compact-delta-files", type=int, default=0,
+                   help="delta commits a bucket holds before a batch "
+                        "compacts it; 0 rewrites every touched bucket")
     r.add_argument("--max-files-per-trigger", type=int, default=None)
     r.add_argument("--v2-schema", action="store_true")
     r.add_argument("--quarantine-dir", default=None,

@@ -7,7 +7,7 @@ the docstrings say how each knob moves at 100 TB.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import InitVar, dataclass, field
 
 
 @dataclass(frozen=True)
@@ -37,24 +37,27 @@ class EngineConfig:
 
     n_buckets: int = 16
     n_salt: int = 8
-    # One write path with a compaction threshold: a touched bucket gets its
-    # changed rows APPENDED as a delta file (O(batch) writes; readers
-    # LWW-reduce base+deltas) until it holds the threshold of delta
-    # commits, and is then compacted back to a base file in the same job.
-    # "mor": the threshold is `compact_delta_files`.
-    # "cow": the threshold is 0, so every touched bucket is rewritten every
-    #        batch (O(touched table data) writes). It is mor compacting
-    #        every batch, with files outside the batch's conv_id ranges
-    #        carried forward unread.
-    # "cow" stays the default (the library and the CLI's `replay`) because
-    # it keeps a table delta-free, so reads skip the base+delta LWW resolve.
+    # The one write setting: a touched bucket gets its changed rows
+    # APPENDED as a delta file (O(batch) writes; readers LWW-reduce
+    # base+deltas) until it holds `compact_delta_files` delta commits, and
+    # is then compacted back to a base file in the same job. At 0 every
+    # touched bucket is rewritten every batch (O(touched table data)
+    # writes), with files outside the batch's conv_id ranges carried
+    # forward unread.
+    # 0 stays the default (the library and the CLI's `replay`) because it
+    # keeps a table delta-free, so reads skip the base+delta LWW resolve.
     # Measured with scripts/cow_mor_read_bench.py (8 batches of 20k events
     # over 2k conversations, 16 buckets, 4 cores): a full scan took 0.15 s
-    # on the cow table vs 0.81 s with 8 deltas per bucket, a point read
-    # 0.10 s vs 0.17 s, for about 1.5x the write time (BENCH/SUSTAINED.md).
-    # Ingest at scale sets "mor", as bench.py and perfbench do: at 10^10
-    # events cow write amplification grows with table size.
-    merge_mode: str = "cow"
+    # on the delta-free table vs 0.81 s with 8 deltas per bucket, a point
+    # read 0.10 s vs 0.17 s, for about 1.5x the write time
+    # (BENCH/SUSTAINED.md). Ingest at scale sets a threshold, as bench.py
+    # and perfbench do: at 10^10 events rewriting every touched bucket
+    # grows with table size.
+    compact_delta_files: int = 0
+    # Init-only alias kept for callers written against the old two-mode
+    # setting: "cow" sets compact_delta_files to 0; "mor" keeps the given
+    # threshold, which must then be at least 1.
+    merge_mode: InitVar[str | None] = None
     # "row": whole-row LWW — the (ts, event_seq) winner's payload replaces
     #        the row, nulls included (BASELINE.json's normative rule).
     # "coalesce": field-level LWW (reference Work.update semantics,
@@ -94,15 +97,22 @@ class EngineConfig:
     # poisoning the table or failing the stream. None (default) skips
     # validation entirely — zero cost when the transport is trusted.
     quarantine_dir: str | None = None
-    compact_delta_files: int = 8
     shuffle_partitions: int = 32
     # Columns that make up the natural key of a transcript turn.
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx")
     # Columns defining the last-writer-wins total order (major..minor).
     order_cols: tuple[str, ...] = ("ts", "event_seq")
-    def __post_init__(self):
-        if self.merge_mode not in ("cow", "mor"):
-            raise ValueError(f"merge_mode must be cow|mor, got {self.merge_mode!r}")
+    def __post_init__(self, merge_mode: str | None):
+        if merge_mode == "cow":
+            object.__setattr__(self, "compact_delta_files", 0)
+        elif merge_mode == "mor":
+            if self.compact_delta_files < 1:
+                raise ValueError(
+                    "merge_mode='mor' needs compact_delta_files >= 1; "
+                    "a threshold of 0 compacts every batch"
+                )
+        elif merge_mode is not None:
+            raise ValueError(f"merge_mode must be cow|mor, got {merge_mode!r}")
         if self.column_merge not in ("row", "coalesce"):
             raise ValueError(
                 f"column_merge must be row|coalesce, got {self.column_merge!r}"

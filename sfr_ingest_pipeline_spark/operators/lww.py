@@ -6,22 +6,33 @@ reconstructed); here that becomes a combiner-friendly ``max_by(struct(payload),
 struct(ts, event_seq))`` hash aggregate — partial (map-side) + final, so hot
 keys are pre-reduced inside each input partition before any shuffle.
 
+This module is the engine's ONE place that builds a winner aggregate or a
+salted pre-phase. :func:`lww_reduce` serves the batch dedup, the fused
+MERGE (order extended by a Column tie-break, counter inputs kept beside the
+winner through ``aggs``), commit-recency resolution of stored versions
+(``table.transcript_table.resolve_stored_versions``) and the
+newest-``snapshot_id`` reads of the materialized views and ledgers; the
+field-level fold (:func:`coalesce_fold`) shares its salted wrapper.
+
 Skew (BASELINE.json:6 "salted repartitioning ... hot-conversation skew"):
-``lww_reduce`` optionally runs TWO phases — phase 1 groups on
-(key..., salt) where salt = pmod(xxhash64(order_cols), n_salt), phase 2 on
+:func:`salted` optionally runs a reduce TWICE — phase 1 groups on
+(key..., salt) where salt = pmod(hash(order), n_salt), phase 2 on
 (key...) — so no single reducer ever materializes a whole hot key even when
 partial aggregation is defeated (e.g. wide payloads spilling the hash map).
+Every aggregate here is associative (max_by over a total order, max, sum),
+so the two phases give the one-phase answer.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Mapping
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_WINNER = "_lww_winner"
+_WINNER = "_w"
 
 
 def _is_present(col: Column, dtype: T.DataType) -> Column:
@@ -35,42 +46,63 @@ def _is_present(col: Column, dtype: T.DataType) -> Column:
     return p
 
 
-def _reduce_once(
+def salted(
     df: DataFrame,
-    group_cols: Sequence[str],
-    payload_cols: Sequence[str],
-    order_cols: Sequence[str],
+    key_cols: Sequence[str],
+    n_salt: int,
+    salt: Column,
+    reduce: Callable[[DataFrame, list[str]], DataFrame],
 ) -> DataFrame:
-    winner = F.max_by(
-        F.struct(*[F.col(c) for c in payload_cols]),
-        F.struct(*[F.col(c) for c in order_cols]),
-    ).alias(_WINNER)
-    agg = df.groupBy(*group_cols).agg(winner)
-    return agg.select(
-        *group_cols, *[F.col(f"{_WINNER}.{c}").alias(c) for c in payload_cols]
-    )
+    """``reduce(df, group_cols)`` on the keys, preceded when ``n_salt > 1``
+    by the same reduce on (keys, pmod(salt, n_salt)). ``reduce`` must keep
+    its input's column names so the second phase can re-aggregate the
+    first's output."""
+    if n_salt and n_salt > 1:
+        pre = df.withColumn("_salt", F.pmod(salt, F.lit(n_salt)))
+        df = reduce(pre, [*key_cols, "_salt"]).drop("_salt")
+    return reduce(df, list(key_cols))
 
 
 def lww_reduce(
     df: DataFrame,
     key_cols: Sequence[str] = ("conv_id", "turn_idx"),
-    order_cols: Sequence[str] = ("ts", "event_seq"),
+    order_cols: Sequence[str | Column] = ("ts", "event_seq"),
     n_salt: int = 1,
+    *,
+    payload_cols: Sequence[str] | None = None,
+    aggs: Mapping[str, Callable[[str], Column]] | None = None,
 ) -> DataFrame:
-    """Keep, per key, the payload of the max-(order_cols) event.
+    """Keep, per key, the payload of the max-(order_cols) row.
 
-    All non-key columns (including the order columns) survive as the winning
-    row's values. With ``n_salt > 1`` runs the salted two-phase variant.
-    """
-    payload_cols = [c for c in df.columns if c not in key_cols]
-    if n_salt and n_salt > 1:
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(n_salt))
-        salted = df.withColumn("_salt", salt)
-        phase1 = _reduce_once(
-            salted, [*key_cols, "_salt"], payload_cols, order_cols
+    ``payload_cols`` (default: every non-key column not in ``aggs``,
+    including the order columns) survive as the winning row's values.
+    An ``order_cols`` entry may be a named Column expression (e.g. a
+    tie-break over a payload column); the salt hashes only the entries
+    given by name. ``aggs`` maps a column to an associative aggregate kept
+    beside the winner, e.g. ``{"_n_s": F.sum}``. Output: keys, payload,
+    then the ``aggs`` columns. With ``n_salt > 1`` runs the salted
+    two-phase variant (:func:`salted`)."""
+    aggs = dict(aggs or {})
+    if payload_cols is None:
+        payload_cols = [c for c in df.columns
+                        if c not in key_cols and c not in aggs]
+    order = [F.col(c) if isinstance(c, str) else c for c in order_cols]
+
+    def reduce(d: DataFrame, group_cols: list[str]) -> DataFrame:
+        winner = F.max_by(
+            F.struct(*[F.col(c) for c in payload_cols]), F.struct(*order)
+        ).alias(_WINNER)
+        agg = d.groupBy(*group_cols).agg(
+            winner, *[fn(c).alias(c) for c, fn in aggs.items()]
         )
-        return _reduce_once(phase1.drop("_salt"), key_cols, payload_cols, order_cols)
-    return _reduce_once(df, key_cols, payload_cols, order_cols)
+        return agg.select(
+            *group_cols,
+            *[F.col(f"{_WINNER}.{c}").alias(c) for c in payload_cols],
+            *aggs,
+        )
+
+    salt = F.xxhash64(*[F.col(c) for c in order_cols if isinstance(c, str)])
+    return salted(df, key_cols, n_salt, salt, reduce)
 
 
 # --------------------------------------------------------------------------
@@ -95,7 +127,8 @@ def lww_reduce(
 #       _src_hw  newest source event order
 #       _del_src newest source DELETE order
 #       _cand_c  newest non-null source value per payload column
-#   agg:      groupBy(keys[, salt]).agg(max(...)) — plain max/sum
+#   agg:      groupBy(keys[, salt]).agg(max(...)) — plain max/sum; the
+#             salted fold over it is coalesce_fold
 #   finalize: oracle-identical combine (oracle.py _apply_coalesce_key)
 #
 # Tie rule matches the row-level merge: state wins an exact
@@ -188,6 +221,22 @@ def coalesce_agg(
         *[F.max(f"_cand_{c}").alias(f"_cand_{c}") for c in payload_cols],
         F.sum("_n_s").alias("_n_s"),
         F.max("_has_t").alias("_has_t"),
+    )
+
+
+def coalesce_fold(
+    cand: DataFrame,
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+    payload_cols: Sequence[str],
+    n_salt: int = 1,
+) -> DataFrame:
+    """:func:`coalesce_agg` per key over :func:`coalesce_candidates` output,
+    salted (:func:`salted`) by the hash of each row's source order."""
+    salt = F.xxhash64(*[F.col(f"_src_hw.o{i}") for i in range(len(order_cols))])
+    return salted(
+        cand, key_cols, n_salt, salt,
+        lambda df, group_cols: coalesce_agg(df, group_cols, payload_cols),
     )
 
 
@@ -340,16 +389,7 @@ def coalesce_lww_reduce(
         }
     )
     cand = coalesce_candidates(base, order_cols, payload_cols)
-    if n_salt and n_salt > 1:
-        salt = F.pmod(
-            F.xxhash64(*[F.col(f"_src_hw.o{i}") for i in range(len(order_cols))]),
-            F.lit(n_salt),
-        )
-        pre = coalesce_agg(
-            cand.withColumn("_salt", salt), [*key_cols, "_salt"], payload_cols
-        )
-        cand = pre.drop("_salt")
-    agg = coalesce_agg(cand, key_cols, payload_cols)
+    agg = coalesce_fold(cand, key_cols, order_cols, payload_cols, n_salt)
     carry = [*payload_cols, *order_cols, "_deleted"]
     out = coalesce_finalize(agg, key_cols, carry, order_cols, payload_cols)
     if not keep_deleted:

@@ -43,11 +43,10 @@ Why this shape at 100 TB:
   * one write path: a touched bucket either gets its changed rows appended
     as a delta file — O(batch) writes — or, once it holds a threshold of
     delta commits, is compacted back to base form in the same write job;
-    readers LWW-reduce base+deltas. config.merge_mode only sets that
-    threshold: "mor" uses compact_delta_files, "cow" is the threshold 0
-    (every touched bucket rewritten every batch). The fused aggregation
-    is layout-agnostic: multi-version target rows entering the union
-    resolve to current state by the same max_by;
+    readers LWW-reduce base+deltas. config.compact_delta_files is that
+    threshold; at 0 every touched bucket is rewritten every batch. The
+    fused aggregation is layout-agnostic: multi-version target rows
+    entering the union resolve to current state by the same max_by;
   * two MERGE semantics (config.column_merge): "row" replaces the whole row
     with the LWW winner's payload; "coalesce" is the reference's field-level
     LWW (update-if-non-null per column, SURVEY.md §3.1 E2) via the
@@ -82,9 +81,10 @@ from pyspark.sql import types as T
 from sfr_ingest_pipeline_spark.config import DEFAULT_CONFIG, EngineConfig
 from sfr_ingest_pipeline_spark.functions.normalize import normalize_text_udf
 from sfr_ingest_pipeline_spark.operators.lww import (
-    coalesce_agg,
     coalesce_candidates,
     coalesce_finalize,
+    coalesce_fold,
+    lww_reduce,
 )
 from sfr_ingest_pipeline_spark.schema import coercion_kind, widen_schema
 from sfr_ingest_pipeline_spark.table.transcript_table import (
@@ -249,39 +249,6 @@ def _null_fill(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(*cols, *extra)
 
 
-def _merge_agg(df: DataFrame, key_cols: list[str], carry_cols: list[str],
-               order_cols: list[str], tie_wins: str = "state") -> DataFrame:
-    """One LWW+merge aggregation level. ``carry_cols`` are the payload+meta
-    columns riding inside the winner struct; ``_n_s`` (batch-row count) and
-    ``_has_t`` fold additively so the salted pre-phase composes.
-
-    ``tie_wins``: exact-order ties go to stored state (``_src_rank`` asc in
-    the winner order — re-deliveries die) or to the batch row (rank negated
-    — the replication apply for coalesce-source changelogs, see
-    EngineConfig.tie_wins)."""
-    tie = (
-        F.col("_src_rank") if tie_wins == "state"
-        else (-F.col("_src_rank")).cast("int")
-    )
-    order = F.struct(*[F.col(c) for c in order_cols], tie.alias("_tie"))
-    winner = F.max_by(
-        F.struct(*[F.col(c) for c in carry_cols], F.col("_src_rank")), order
-    ).alias("_w")
-    group = df.groupBy(*key_cols).agg(
-        winner,
-        F.sum("_n_s").alias("_n_s"),
-        F.max("_has_t").alias("_has_t"),
-    )
-    out = group.select(
-        *key_cols,
-        *[F.col(f"_w.{c}").alias(c) for c in carry_cols],
-        F.col("_w._src_rank").alias("_src_rank"),
-        "_n_s",
-        "_has_t",
-    )
-    return out
-
-
 def apply_batch(
     spark: SparkSession,
     table_root: str,
@@ -388,12 +355,12 @@ def apply_batch(
 
     # ---- compaction decision (metadata only; needed before the scan) -----
     # A touched bucket is compacted (rewritten to base form) once it holds
-    # `threshold` delta commits; every other touched bucket gets only its
-    # changed rows appended as a delta. "cow" is the threshold 0: every
-    # touched bucket is rewritten every batch.
-    threshold = 0 if config.merge_mode == "cow" else config.compact_delta_files
+    # `compact_delta_files` delta commits; every other touched bucket gets only its
+    # changed rows appended as a delta. At the threshold 0 every touched
+    # bucket is rewritten every batch.
     delta_counts = table.delta_file_counts(set(touched))
-    compact = {b for b in touched if delta_counts.get(b, 0) >= threshold}
+    compact = {b for b in touched
+               if delta_counts.get(b, 0) >= config.compact_delta_files}
 
     # ---- target side: bucket- AND conv_id-range-pruned scan ----------------
     # within a touched bucket, a file whose (conv_id_min, conv_id_max) range
@@ -489,9 +456,9 @@ def apply_batch(
     )
 
     # ---- fused LWW + merge aggregation -------------------------------------
-    # row mode: whole-row max_by winner. coalesce mode: field-level LWW
-    # (operators/lww.py coalesce_* stages) — same single wide shuffle, the
-    # aggregate carries one order-leading candidate struct per payload
+    # row mode: whole-row lww_reduce winner. coalesce mode: field-level
+    # LWW (operators/lww.py coalesce_* stages) — same single wide shuffle,
+    # the aggregate carries one order-leading candidate struct per payload
     # column instead of one winner struct. ``_changed`` marks rows whose
     # resolved state differs from the prior target state (row won by the
     # batch, or any column filled by a batch event) — that, not
@@ -503,31 +470,24 @@ def apply_batch(
                         if c not in order_cols
                         and c not in ("_deleted", "_del_hw")]
         cand = coalesce_candidates(unioned, order_cols, payload_cols)
-        if config.n_salt and config.n_salt > 1:
-            cand_salt = F.pmod(
-                F.xxhash64(*[F.col(f"_src_hw.o{i}")
-                             for i in range(len(order_cols))]),
-                F.lit(config.n_salt),
-            )
-            pre = coalesce_agg(cand.withColumn("_salt", cand_salt),
-                               [*key_cols, "_salt"], payload_cols)
-            cand = pre.drop("_salt")
-        agg = coalesce_agg(cand, key_cols, payload_cols)
+        agg = coalesce_fold(cand, key_cols, order_cols, payload_cols,
+                            config.n_salt)
         resolved = coalesce_finalize(agg, key_cols, carry_cols, order_cols,
                                      payload_cols)
     else:
-        if config.n_salt and config.n_salt > 1:
-            # salted pre-phase for pathological hot keys: reduce on
-            # (key, salt) first so no single reducer materializes a whole
-            # hot key
-            salt = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]),
-                          F.lit(config.n_salt))
-            pre = _merge_agg(unioned.withColumn("_salt", salt),
-                             [*key_cols, "_salt"], carry_cols, order_cols,
-                             tie_wins=config.tie_wins)
-            unioned = pre.drop("_salt")
-        resolved = _merge_agg(unioned, key_cols, carry_cols, order_cols,
-                              tie_wins=config.tie_wins)
+        # exact-order ties go to stored state (_src_rank ascending: a
+        # re-delivery dies) or, under tie_wins="batch", to the batch row
+        # (rank negated; see EngineConfig.tie_wins). _n_s (batch-row count)
+        # and _has_t fold beside the winner as the counter inputs.
+        tie = (
+            F.col("_src_rank") if config.tie_wins == "state"
+            else (-F.col("_src_rank")).cast("int")
+        )
+        resolved = lww_reduce(
+            unioned, key_cols, [*order_cols, tie.alias("_tie")], config.n_salt,
+            payload_cols=[*carry_cols, "_src_rank"],
+            aggs={"_n_s": F.sum, "_has_t": F.max},
+        )
         resolved = resolved.withColumn("_changed", F.col("_src_rank") == 0)
 
     obs_m = Observation(f"merge_{batch_id}_{uuid.uuid4().hex[:6]}")

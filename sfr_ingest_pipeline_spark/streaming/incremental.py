@@ -48,6 +48,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from sfr_ingest_pipeline_spark.operators.lww import lww_reduce
 from sfr_ingest_pipeline_spark.table.transcript_table import TranscriptTable
 
 STATE_FILE = "_VIEW_STATE.json"
@@ -235,15 +236,10 @@ class IncrementalAggView:
             return spark.createDataFrame(
                 [], "conv_id string, n_turns long, total_chars long, last_ts timestamp"
             )
-        df = spark.read.parquet(self._data_dir)
-        winner = F.max_by(
-            F.struct("n_turns", "total_chars", "last_ts"), F.col("snapshot_id")
-        ).alias("_w")
-        return (
-            df.groupBy("conv_id").agg(winner)
-            .select("conv_id", "_w.n_turns", "_w.total_chars", "_w.last_ts")
-            .filter(F.col("n_turns") > 0)
-        )
+        return lww_reduce(
+            spark.read.parquet(self._data_dir), ["conv_id"], ["snapshot_id"],
+            payload_cols=["n_turns", "total_chars", "last_ts"],
+        ).filter(F.col("n_turns") > 0)
 
     def compact(self, spark: SparkSession) -> int:
         """One physical row per group; drops superseded versions/markers."""

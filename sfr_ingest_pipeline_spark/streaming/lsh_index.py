@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sfr_ingest_pipeline_spark.functions.dedup import minhash_bands, sha_key
+from sfr_ingest_pipeline_spark.operators.lww import lww_reduce
 from sfr_ingest_pipeline_spark.table.transcript_table import TranscriptTable
 
 STATE_FILE = "_LSH_STATE.json"
@@ -195,15 +196,8 @@ class IncrementalLshIndex:
     def signatures(self, spark: SparkSession) -> DataFrame:
         """Current index: one row per live doc (newest stamp per key wins,
         tombstones drop)."""
-        df = spark.read.parquet(self._data_dir)
-        payload = [c for c in df.columns if c not in ("conv_id", "turn_idx")]
-        winner = F.max_by(
-            F.struct(*[F.col(c) for c in payload]), F.col("snapshot_id")
-        ).alias("_w")
-        cur = df.groupBy("conv_id", "turn_idx").agg(winner).select(
-            "conv_id", "turn_idx",
-            *[F.col(f"_w.{c}").alias(c) for c in payload],
-        )
+        cur = lww_reduce(spark.read.parquet(self._data_dir),
+                         ["conv_id", "turn_idx"], ["snapshot_id"])
         return cur.filter(~F.col("_dead")).drop("_dead", "snapshot_id")
 
     def compact(self, spark: SparkSession) -> int:
@@ -401,14 +395,8 @@ class IncrementalNearDupView:
     def _stored(self, spark: SparkSession) -> DataFrame | None:
         if not os.path.isdir(self._pairs_dir):
             return None
-        df = spark.read.parquet(self._pairs_dir)
-        winner = F.max_by(
-            F.struct("jaccard", "_dead"), F.col("snapshot_id")
-        ).alias("_w")
-        cur = df.groupBy("id_a", "id_b").agg(winner).select(
-            "id_a", "id_b", F.col("_w.jaccard").alias("jaccard"),
-            F.col("_w._dead").alias("_dead"),
-        )
+        cur = lww_reduce(spark.read.parquet(self._pairs_dir), ["id_a", "id_b"],
+                         ["snapshot_id"], payload_cols=["jaccard", "_dead"])
         return cur.filter(~F.col("_dead")).drop("_dead")
 
     # ------------------------------------------------------------ refresh

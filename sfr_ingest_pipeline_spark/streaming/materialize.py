@@ -27,6 +27,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from sfr_ingest_pipeline_spark.operators.lww import lww_reduce
 from sfr_ingest_pipeline_spark.table.transcript_table import TranscriptTable
 
 
@@ -105,14 +106,7 @@ def materialize_conversations(
 def read_documents(spark: SparkSession, out_dir: str) -> DataFrame:
     """Current document per conversation: newest ``snapshot_id`` wins;
     conversations whose latest version is a deletion marker are dropped."""
-    df = spark.read.parquet(out_dir)
-    payload = [c for c in df.columns if c != "conv_id"]
-    winner = F.max_by(
-        F.struct(*[F.col(c) for c in payload]), F.col("snapshot_id")
-    ).alias("_w")
-    cur = df.groupBy("conv_id").agg(winner).select(
-        "conv_id", *[F.col(f"_w.{c}").alias(c) for c in payload]
-    )
+    cur = lww_reduce(spark.read.parquet(out_dir), ["conv_id"], ["snapshot_id"])
     return cur.filter(F.col("n_turns") > 0)
 
 

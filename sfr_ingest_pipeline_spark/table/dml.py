@@ -174,7 +174,7 @@ def _dml_commit(
 
     files, n_pruned = _pruned_files(table, conv_ids)
     raw = table.scan(spark, with_meta=True, files=files)
-    cur = resolve_stored_versions(raw, key_cols, order_cols).drop("_cseq")
+    cur = resolve_stored_versions(raw, key_cols, order_cols)
     live = cur.filter(~F.col("_deleted"))
     if conv_ids:
         live = live.filter(F.col("conv_id").isin(list(conv_ids)))

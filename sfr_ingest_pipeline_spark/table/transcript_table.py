@@ -32,8 +32,6 @@ per commit, not O(total files)), and untouched buckets re-reference the
 parent's manifest. MERGE therefore reads O(touched buckets) manifest bytes
 per microbatch, and time travel binary-searches the snapshot log by batch id
 (batch ids are monotone in snapshot ids) in O(log n_commits) JSON reads.
-Snapshots written by the pre-sharding format (inline ``files`` list) still
-load.
 """
 
 from __future__ import annotations
@@ -134,16 +132,13 @@ def resolve_stored_versions(df: DataFrame, key_cols, order_cols) -> DataFrame:
     A caller that joins the scan before resolving must stamp ``_cseq``
     FIRST (``input_file_name()`` is illegal above a multi-source join);
     a precomputed ``_cseq`` column is honored as-is."""
+    # operators/__init__ imports merge, which imports this module
+    from sfr_ingest_pipeline_spark.operators.lww import lww_reduce
+
     if "_cseq" not in df.columns:
         df = df.withColumn("_cseq", commit_seq_col())
     payload = [c for c in df.columns if c not in set(key_cols) | {"_cseq"}]
-    winner = F.max_by(
-        F.struct(*[F.col(c) for c in payload]),
-        F.struct(*[F.col(c) for c in order_cols], F.col("_cseq")),
-    ).alias("_w")
-    return df.groupBy(*key_cols).agg(winner).select(
-        *key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload]
-    )
+    return lww_reduce(df, key_cols, [*order_cols, "_cseq"], payload_cols=payload)
 
 
 def physical_schema(
@@ -215,26 +210,22 @@ class Snapshot:
     # created before this field existed)
     key_cols: list[str] = field(default_factory=lambda: ["conv_id", "turn_idx"])
     order_cols: list[str] = field(default_factory=lambda: ["ts", "event_seq"])
-    # pre-sharding snapshots stored the full file list inline; kept readable
-    legacy_files: list[DataFileInfo] | None = None
 
     @property
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(self.schema_json)
 
     def to_json(self) -> dict:
-        d = asdict(self)
-        d.pop("legacy_files", None)
-        return d
+        return asdict(self)
 
     @staticmethod
     def from_json(d: dict) -> "Snapshot":
-        d = dict(d)
-        legacy = None
-        if "files" in d:  # pre-sharding format
-            legacy = [DataFileInfo(**f) for f in d.pop("files")]
-        d.pop("legacy_files", None)
-        return Snapshot(legacy_files=legacy, **d)
+        if "files" in d:
+            raise ValueError(
+                "snapshot uses the pre-sharding format (an inline 'files' "
+                "list), which is no longer readable"
+            )
+        return Snapshot(**d)
 
 
 class SnapshotExpiredError(RuntimeError):
@@ -561,10 +552,6 @@ class TranscriptTable:
         """File entries for the given buckets (None = all). Reads only the
         manifest files those buckets reference — O(touched) per microbatch."""
         snap = self.snapshot
-        if snap.legacy_files is not None:
-            if buckets is None:
-                return list(snap.legacy_files)
-            return [f for f in snap.legacy_files if f.bucket in buckets]
         wanted = (
             sorted(int(b) for b in snap.manifests)
             if buckets is None
@@ -1040,15 +1027,7 @@ class TranscriptTable:
                     keep = old
                 post[b] = keep + new_by_bucket.get(b, [])
 
-            if cur.legacy_files is None:
-                manifests = dict(cur.manifests)
-            else:
-                # migrating a legacy snapshot: materialize untouched buckets
-                # into the new manifest too (one-time O(files) rewrite)
-                manifests = {}
-                for f in cur.legacy_files:
-                    if f.bucket not in touched:
-                        post.setdefault(f.bucket, []).append(f)
+            manifests = dict(cur.manifests)
             if post:
                 mf_rel = "/".join([
                     "metadata", "manifests",
@@ -1161,8 +1140,6 @@ class TranscriptTable:
         history references, rolled-back-over or not."""
         target = TranscriptTable.load(self.root, to_snapshot_id).snapshot
         cur = self.snapshot
-        if target.legacy_files is not None:
-            raise ValueError("cannot roll back to a pre-sharding legacy snapshot")
         props = dict(target.properties)
         props["maintenance"] = {
             "op": "rollback",

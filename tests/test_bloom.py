@@ -72,7 +72,7 @@ def scattered_table(spark, tmp_path, small_cfg):
     last conv alphabetically), so range pruning alone reads everything."""
     from dataclasses import replace
 
-    cfg = replace(small_cfg, merge_mode="mor")
+    cfg = replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     convs = [f"conv-{i:04d}" for i in range(60)]
@@ -119,7 +119,7 @@ def test_point_batch_prunes_beyond_range(spark, tmp_path, small_cfg):
     spans the whole keyspace and range pruning alone reads all of them."""
     from dataclasses import replace
 
-    cfg = replace(small_cfg, n_buckets=1, merge_mode="mor")
+    cfg = replace(small_cfg, n_buckets=1, compact_delta_files=8)
     convs = [f"conv-{i:04d}" for i in range(40)]
     root = str(tmp_path / "t")
     _build_wide_range_table(spark, root, cfg, convs)
@@ -147,8 +147,8 @@ def test_bloom_pruning_vs_disabled_same_result(spark, tmp_path, small_cfg):
     from dataclasses import replace
 
     cfgs = {
-        "on": replace(small_cfg, n_buckets=1, merge_mode="mor"),
-        "off": replace(small_cfg, n_buckets=1, merge_mode="mor",
+        "on": replace(small_cfg, n_buckets=1, compact_delta_files=8),
+        "off": replace(small_cfg, n_buckets=1, compact_delta_files=8,
                        file_bloom_fpp=None, bloom_probe_rows=0),
     }
     convs = [f"conv-{i:04d}" for i in range(40)]
@@ -202,7 +202,7 @@ def test_expire_gcs_unreferenced_bloom_sidecars(spark, tmp_path, small_cfg):
         expire_snapshots,
     )
 
-    cfg = replace(small_cfg, n_buckets=1, merge_mode="mor")
+    cfg = replace(small_cfg, n_buckets=1, compact_delta_files=8)
     root = str(tmp_path / "t")
     _build_wide_range_table(
         spark, root, cfg, [f"conv-{i:04d}" for i in range(40)]

@@ -118,7 +118,7 @@ def test_live_branch_pins_files_against_expire(
     """expire_snapshots on main must retain every file a live branch
     references — both its staged commits and its fork-history files —
     regardless of keep_last; dropping the branch releases them."""
-    cfg = replace(small_cfg, merge_mode="mor", compact_delta_files=100)
+    cfg = replace(small_cfg, compact_delta_files=100)
     root = _build(spark, tmp_path, segments_basic, cfg, 2)
     broot = create_branch(root, "longaudit")
     apply_batch(spark, broot, spark.createDataFrame(segments_basic[2]), 2,

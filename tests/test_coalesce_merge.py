@@ -98,13 +98,13 @@ def _assert_matches_oracle(spark, root, results, batches):
     assert eng == orc
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_edge_cases_match_oracle(spark, tmp_path, mode):
-    cfg = EngineConfig(n_buckets=4, n_salt=4, merge_mode=mode,
-                       column_merge="coalesce", compact_delta_files=100,
+@pytest.mark.parametrize("threshold", [0, 100], ids=["cow", "mor"])
+def test_edge_cases_match_oracle(spark, tmp_path, threshold):
+    cfg = EngineConfig(n_buckets=4, n_salt=4, compact_delta_files=threshold,
+                       column_merge="coalesce",
                        shuffle_partitions=8)
     batches = _edge_batches()
-    root, results = _replay(spark, tmp_path, batches, cfg, f"edge_{mode}")
+    root, results = _replay(spark, tmp_path, batches, cfg, f"edge_{threshold}")
     _assert_matches_oracle(spark, root, results, batches)
     # pin the semantics, not just oracle agreement
     got = {
@@ -123,8 +123,8 @@ def test_mor_stale_fill_survives_commit_collision(spark, tmp_path):
     """The stale fill writes a delta at the SAME (ts, event_seq) as the base
     version it supersedes; without the commit-seq tie-break the read-side
     resolve could return the unfilled row."""
-    cfg = EngineConfig(n_buckets=2, n_salt=1, merge_mode="mor",
-                       column_merge="coalesce", compact_delta_files=100,
+    cfg = EngineConfig(n_buckets=2, n_salt=1, compact_delta_files=100,
+                       column_merge="coalesce",
                        shuffle_partitions=4)
     b0 = pd.DataFrame([_ev("I", "c9", 0, "user", "body", None, 100, 1)])
     b1 = pd.DataFrame([_ev("U", "c9", 0, None, None, "sql", 50, 2)])  # stale fill
@@ -149,9 +149,9 @@ def test_cow_batch_folds_range_disjoint_stale_fill_delta(spark, tmp_path):
     from dataclasses import replace
 
     # shuffle_partitions=1: one write salt, so a bucket rewrite is one file
-    cow = EngineConfig(n_buckets=1, n_salt=1, merge_mode="cow",
+    cow = EngineConfig(n_buckets=1, n_salt=1, compact_delta_files=0,
                        column_merge="coalesce", shuffle_partitions=1)
-    mor = replace(cow, merge_mode="mor", compact_delta_files=100)
+    mor = replace(cow, compact_delta_files=100)
     batches = [
         pd.DataFrame([_ev("I", "c_a", 0, "user", "a", None, 100, 1),
                       _ev("I", "c_m", 0, "user", "m", None, 100, 2)]),
@@ -170,21 +170,21 @@ def test_cow_batch_folds_range_disjoint_stale_fill_delta(spark, tmp_path):
     assert {f.kind for f in TranscriptTable.load(root).files} == {"base"}
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_generated_partial_updates_match_oracle(spark, tmp_path, mode):
+@pytest.mark.parametrize("threshold", [0, 3], ids=["cow", "mor"])
+def test_generated_partial_updates_match_oracle(spark, tmp_path, threshold):
     """Generator-driven golden: 1500 events with 40% partial updates, dups,
     late events, deletes and ts ties, replayed segment-per-batch."""
-    d = str(tmp_path / f"binlog_{mode}")
+    d = str(tmp_path / f"binlog_{threshold}")
     generate_binlog(
         d, seed=77, n_conversations=40, n_events=1500, n_segments=5,
         delete_ratio=0.08, duplicate_ratio=0.08, late_ratio=0.08,
         ts_tie_ratio=0.1, partial_update_ratio=0.4,
     )
     batches = load_binlog_pandas(d)
-    cfg = EngineConfig(n_buckets=8, n_salt=4, merge_mode=mode,
-                       column_merge="coalesce", compact_delta_files=3,
+    cfg = EngineConfig(n_buckets=8, n_salt=4, compact_delta_files=threshold,
+                       column_merge="coalesce",
                        shuffle_partitions=8)
-    root, results = _replay(spark, tmp_path, batches, cfg, f"gen_{mode}")
+    root, results = _replay(spark, tmp_path, batches, cfg, f"gen_{threshold}")
     _assert_matches_oracle(spark, root, results, batches)
 
 
@@ -267,8 +267,8 @@ def test_streaming_spine_coalesce(spark, tmp_path):
         d, seed=31, n_conversations=30, n_events=900, n_segments=3,
         delete_ratio=0.08, duplicate_ratio=0.08, partial_update_ratio=0.5,
     )
-    cfg = EngineConfig(n_buckets=4, n_salt=4, merge_mode="mor",
-                       column_merge="coalesce", compact_delta_files=2,
+    cfg = EngineConfig(n_buckets=4, n_salt=4, compact_delta_files=2,
+                       column_merge="coalesce",
                        shuffle_partitions=8)
     root = str(tmp_path / "t_stream")
     results = replay_stream(
@@ -279,35 +279,35 @@ def test_streaming_spine_coalesce(spark, tmp_path):
     _assert_matches_oracle(spark, root, results, load_binlog_pandas(d))
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_schema_evolution_mid_replay_coalesce(spark, tmp_path, mode):
+@pytest.mark.parametrize("threshold", [0, 3], ids=["cow", "mor"])
+def test_schema_evolution_mid_replay_coalesce(spark, tmp_path, threshold):
     """A column appearing mid-replay (ALTER-on-write) under coalesce: old
     state null-fills the new column, later partial updates fill it
     per-column, and the sequential oracle agrees batch-by-batch."""
-    d = str(tmp_path / f"evo_{mode}")
+    d = str(tmp_path / f"evo_{threshold}")
     generate_binlog(
         d, seed=19, n_conversations=25, n_events=900, n_segments=4,
         partial_update_ratio=0.4, schema_v2_from_segment=2,
     )
     batches = load_binlog_pandas(d)
-    cfg = EngineConfig(n_buckets=4, n_salt=4, merge_mode=mode,
-                       column_merge="coalesce", compact_delta_files=3,
+    cfg = EngineConfig(n_buckets=4, n_salt=4, compact_delta_files=threshold,
+                       column_merge="coalesce",
                        shuffle_partitions=8)
-    root, results = _replay(spark, tmp_path, batches, cfg, f"evo_t_{mode}")
+    root, results = _replay(spark, tmp_path, batches, cfg, f"evo_t_{threshold}")
     _assert_matches_oracle(spark, root, results, batches)
     # the evolved column exists and is non-null somewhere post-widening
     got = TranscriptTable.load(root).scan(spark)
     assert "tool_meta" in got.columns
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_delete_memory_blocks_pre_delete_fill_across_batches(spark, tmp_path, mode):
+@pytest.mark.parametrize("threshold", [0, 100], ids=["cow", "mor"])
+def test_delete_memory_blocks_pre_delete_fill_across_batches(spark, tmp_path, threshold):
     """The hypothesis-caught hole: after delete -> reinsert, the committed
     live row must still REMEMBER the delete (_del_hw physical column) so a
     late pre-delete event cannot fill columns it lost to the tombstone —
     across batch boundaries and under re-application."""
-    cfg = EngineConfig(n_buckets=2, n_salt=1, merge_mode=mode,
-                       column_merge="coalesce", compact_delta_files=100,
+    cfg = EngineConfig(n_buckets=2, n_salt=1, compact_delta_files=threshold,
+                       column_merge="coalesce",
                        shuffle_partitions=4)
     batches = [
         pd.DataFrame([_ev("I", "m1", 0, "user", "v1", "search", 10, 1)]),
@@ -317,7 +317,7 @@ def test_delete_memory_blocks_pre_delete_fill_across_batches(spark, tmp_path, mo
         # tool value died with the tombstone and must stay dead
         pd.DataFrame([_ev("U", "m1", 0, None, None, "python", 15, 4)]),
     ]
-    root, results = _replay(spark, tmp_path, batches, cfg, f"mem_{mode}")
+    root, results = _replay(spark, tmp_path, batches, cfg, f"mem_{threshold}")
     _assert_matches_oracle(spark, root, results, batches)
     row = TranscriptTable.load(root).scan(spark).collect()[0]
     assert row["text"] == "v2" and row["tool"] is None, row
@@ -336,8 +336,8 @@ def test_delete_memory_blocks_pre_delete_fill_across_batches(spark, tmp_path, mo
     assert row["text"] == "v2", row  # 12 < 20: still blocked post-compaction
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_float_nan_counts_as_missing(spark, tmp_path, mode):
+@pytest.mark.parametrize("threshold", [0, 100], ids=["cow", "mor"])
+def test_float_nan_counts_as_missing(spark, tmp_path, threshold):
     """A float NaN in a payload column is MISSING for the field-level fold
     (round-3 ADVICE): the pandas oracle's pd.isna already treats it so; the
     engine must isnan-guard its isNotNull presence tests or the two diverge
@@ -347,10 +347,10 @@ def test_float_nan_counts_as_missing(spark, tmp_path, mode):
     import numpy as np
     from pyspark.sql import types as T
 
-    cfg = EngineConfig(n_buckets=4, n_salt=4, merge_mode=mode,
-                       column_merge="coalesce", compact_delta_files=100,
+    cfg = EngineConfig(n_buckets=4, n_salt=4, compact_delta_files=threshold,
+                       column_merge="coalesce",
                        shuffle_partitions=8)
-    root = str(tmp_path / f"nan_{mode}")
+    root = str(tmp_path / f"nan_{threshold}")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
 
     schema = T.StructType([

@@ -146,7 +146,7 @@ def test_threaded_ingest_vs_compact_converges_exact(
     )
 
     binlog, _ = binlog_basic
-    cfg = replace(small_cfg, merge_mode="mor", compact_delta_files=10_000)
+    cfg = replace(small_cfg, compact_delta_files=10_000)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     segments = load_binlog_pandas(binlog)

@@ -1,6 +1,6 @@
 """Checked-in golden replay (FIXTURES.md §A4): the committed binlog must
-replay — through the full streaming MERGE path, in both physical modes — to
-the committed expected table, byte-for-byte on text under stable
+replay — through the full streaming MERGE path, at compaction thresholds 0
+and 2 — to the committed expected table, byte-for-byte on text under stable
 (conv_id, turn_idx) ordering (BASELINE.json:15)."""
 
 import os
@@ -22,12 +22,12 @@ def expected():
     return pd.read_parquet(os.path.join(BASE, "expected.parquet"))
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_golden_replay(spark, tmp_path, small_cfg, expected, mode):
-    cfg = replace(small_cfg, merge_mode=mode, compact_delta_files=2)
-    root = str(tmp_path / f"table_{mode}")
+@pytest.mark.parametrize("threshold", [0, 2], ids=["cow", "mor"])
+def test_golden_replay(spark, tmp_path, small_cfg, expected, threshold):
+    cfg = replace(small_cfg, compact_delta_files=threshold)
+    root = str(tmp_path / f"table_{threshold}")
     results = replay_stream(
-        spark, os.path.join(BASE, "binlog"), root, str(tmp_path / f"ckpt_{mode}"),
+        spark, os.path.join(BASE, "binlog"), root, str(tmp_path / f"ckpt_{threshold}"),
         config=cfg, event_schema=CHANGE_EVENT_SCHEMA_V2, max_files_per_trigger=1,
     )
     assert all(r.committed for r in results)

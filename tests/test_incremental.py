@@ -63,13 +63,13 @@ def test_changes_pre_post_fans_out_updates(spark, tmp_path, small_cfg):
     assert all(r.turn_idx == 0 for r in rows)
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("threshold", [0, 8], ids=["cow", "mor"])
 def test_view_matches_full_recompute_every_snapshot(
-    spark, tmp_path, small_cfg, mode
+    spark, tmp_path, small_cfg, threshold
 ):
-    cfg = dc_replace(small_cfg, merge_mode=mode)
-    root = str(tmp_path / f"t_{mode}")
-    view = IncrementalAggView(str(tmp_path / f"v_{mode}"), root)
+    cfg = dc_replace(small_cfg, compact_delta_files=threshold)
+    root = str(tmp_path / f"t_{threshold}")
+    view = IncrementalAggView(str(tmp_path / f"v_{threshold}"), root)
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     batches = [
         # bootstrap content
@@ -89,7 +89,7 @@ def test_view_matches_full_recompute_every_snapshot(
                     i, config=cfg)
         res = view.refresh(spark)
         t = TranscriptTable.load(root)
-        assert view_state(view, spark) == oracle_state(t, spark), (mode, i, res)
+        assert view_state(view, spark) == oracle_state(t, spark), (threshold, i, res)
     assert "c2" in view_state(view, spark)
     # the only delete that removed a group max also emptied the group (c2,
     # batch 3) -> marker path, not recompute; every other step is delta-only

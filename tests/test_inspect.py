@@ -21,9 +21,9 @@ def ev(op, conv, turn, text, seq):
     }
 
 
-def _build(spark, tmp_path, cfg, mode="mor"):
-    cfg = dc_replace(cfg, merge_mode=mode)
-    root = str(tmp_path / f"t_{mode}")
+def _build(spark, tmp_path, cfg):
+    cfg = dc_replace(cfg, compact_delta_files=8)
+    root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     b0 = [ev("I", f"c{i}", 0, f"text {i}", i + 1) for i in range(20)]
     b1 = [ev("U", "c1", 0, "updated", 100), ev("D", "c2", 0, "", 101)]
@@ -47,7 +47,7 @@ def test_files_df_matches_manifest(spark, tmp_path, small_cfg):
 
 
 def test_partitions_df_rolls_up_and_tracks_compaction(spark, tmp_path, small_cfg):
-    root = _build(spark, tmp_path, small_cfg, mode="mor")
+    root = _build(spark, tmp_path, small_cfg)
     t = TranscriptTable.load(root)
     parts = {r.bucket: r for r in tinspect.partitions_df(spark, t).collect()}
     files = t.files
@@ -65,7 +65,7 @@ def test_partitions_df_rolls_up_and_tracks_compaction(spark, tmp_path, small_cfg
 
 
 def test_snapshots_df_lineage_and_counters(spark, tmp_path, small_cfg):
-    root = _build(spark, tmp_path, small_cfg, mode="mor")
+    root = _build(spark, tmp_path, small_cfg)
     compact(spark, root)
     t = TranscriptTable.load(root)
     snaps = tinspect.snapshots_df(spark, t).orderBy("snapshot_id").collect()

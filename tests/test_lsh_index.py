@@ -45,7 +45,7 @@ def _index_pairs(spark, idx):
 def test_index_matches_batch_at_every_snapshot(
     spark, tmp_path, segments_basic, small_cfg
 ):
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     idx = IncrementalLshIndex(str(tmp_path / "lsh"), root,
@@ -83,7 +83,7 @@ def test_delete_and_duplicate_edges(spark, tmp_path, small_cfg):
     probes into pairs via the index."""
     import pandas as pd
 
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     idx = IncrementalLshIndex(str(tmp_path / "lsh"), root,
@@ -140,7 +140,7 @@ def test_crash_between_append_and_cursor_is_idempotent(
     resolved index (and pairs) are unaffected."""
     import pandas as pd
 
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     idx = IncrementalLshIndex(str(tmp_path / "lsh"), root,
@@ -182,7 +182,7 @@ def test_param_drift_refuses_refresh(spark, tmp_path, segments_basic, small_cfg)
     """An index must refuse to refresh under different signature parameters
     (ADVICE r5): cross-parameter signatures never collide, so a drifted
     refresh would silently stop finding pairs instead of failing loudly."""
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     apply_batch(spark, root, spark.createDataFrame(segments_basic[0]), 0,

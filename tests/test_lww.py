@@ -44,3 +44,33 @@ def test_lww_rank_winner_matches_reduce(spark, binlog_basic):
         .count()
         == 0
     )
+
+
+def test_lww_reduce_column_tie_and_aggs_salt_invariant(spark, binlog_hot):
+    """The fused-merge form: a Column tie-break after the named order
+    columns decides exact-order ties, and ``aggs`` fold beside the winner;
+    both give the same rows salted and unsalted."""
+    ev = _spark_events(spark, binlog_hot[0]).withColumn("_rank", F.lit(0))
+    # a rival for every event at the SAME (ts, event_seq), losing the tie
+    rival = ev.withColumn("text", F.lit("rival")).withColumn("_rank", F.lit(1))
+    df = ev.unionByName(rival).withColumns({
+        "_n": (F.col("_rank") == 0).cast("long"),
+        "_has_rival": F.col("_rank") == 1,
+    })
+    order = ["ts", "event_seq", (-F.col("_rank")).alias("_tie")]
+    aggs = {"_n": F.sum, "_has_rival": F.max}
+    keys = ["conv_id", "turn_idx"]
+    payload = [c for c in ev.columns if c not in keys]
+
+    def run(n_salt):
+        out = lww_reduce(df, keys, order, n_salt,
+                         payload_cols=payload, aggs=aggs)
+        assert out.columns == [*keys, *payload, "_n", "_has_rival"]
+        return out.orderBy(*keys).toPandas()
+
+    a, b = run(1), run(8)
+    pd.testing.assert_frame_equal(a, b)
+    assert (a["_rank"] == 0).all() and (a["text"] != "rival").all()
+    assert a["_has_rival"].all()
+    n_events = ev.groupBy(*keys).count().orderBy(*keys).toPandas()
+    assert list(a["_n"]) == list(n_events["count"])

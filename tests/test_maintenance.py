@@ -18,7 +18,7 @@ from sfr_ingest_pipeline_spark.table.transcript_table import TranscriptTable
 
 
 def _build_mor_table(spark, tmp_path, segments, cfg, name="t"):
-    cfg = replace(cfg, merge_mode="mor", compact_delta_files=100)  # never auto-compact
+    cfg = replace(cfg, compact_delta_files=100)  # never auto-compact
     root = str(tmp_path / name)
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     for i, seg in enumerate(segments):
@@ -234,7 +234,7 @@ def test_rebucket_layout_evolution(spark, tmp_path, small_cfg):
     from sfr_ingest_pipeline_spark.oracle import load_binlog_pandas, reduce_binlog, LOGICAL_COLS
     from sfr_ingest_pipeline_spark.table.maintenance import rebucket
 
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     binlog = str(tmp_path / "bl")
     generate_binlog(binlog, seed=13, n_events=4000, n_segments=4,
                     n_conversations=120)
@@ -529,7 +529,7 @@ def test_expire_then_commit_of_inflight_writer_reads_clean(
     BETWEEN write and commit, the commit lands afterwards — every file the
     new snapshot references must still exist and the state must equal the
     oracle replay."""
-    cfg = replace(small_cfg, merge_mode="mor", compact_delta_files=100)
+    cfg = replace(small_cfg, compact_delta_files=100)
     root = str(tmp_path / "trace")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     for i, seg in enumerate(segments_basic[:-1]):
@@ -610,7 +610,7 @@ def test_compact_minor_then_ingest_then_full_compact(
     final state must equal the oracle replay at every step."""
     from sfr_ingest_pipeline_spark.table.maintenance import compact_minor
 
-    cfg = replace(small_cfg, merge_mode="mor", compact_delta_files=100)
+    cfg = replace(small_cfg, compact_delta_files=100)
     root = str(tmp_path / "tiv")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     mid = len(segments_basic) // 2

@@ -143,7 +143,7 @@ def test_conv_range_file_pruning_cow(spark, tmp_path, small_cfg):
     survive the copy-on-write replace exactly."""
     from sfr_ingest_pipeline_spark.config import EngineConfig
 
-    cfg = EngineConfig(n_buckets=1, n_salt=1, merge_mode="cow",
+    cfg = EngineConfig(n_buckets=1, n_salt=1, compact_delta_files=0,
                        shuffle_partitions=4)
     root = str(tmp_path / "prune_cow")
     TranscriptTable.create(root, n_buckets=1)
@@ -190,8 +190,7 @@ def test_conv_range_file_pruning_mor_counters_exact(spark, tmp_path):
 
     from sfr_ingest_pipeline_spark.config import EngineConfig
 
-    cfg = EngineConfig(n_buckets=1, n_salt=1, merge_mode="mor",
-                       compact_delta_files=100, shuffle_partitions=4)
+    cfg = EngineConfig(n_buckets=1, n_salt=1, compact_delta_files=100, shuffle_partitions=4)
     root = str(tmp_path / "prune_mor")
     TranscriptTable.create(root, n_buckets=1)
     ts = datetime.datetime(2024, 1, 1)

@@ -33,7 +33,7 @@ def _table_pandas(spark, root):
 
 @pytest.fixture(scope="module")
 def mor_cfg(small_cfg):
-    return replace(small_cfg, merge_mode="mor", compact_delta_files=3)
+    return replace(small_cfg, compact_delta_files=3)
 
 
 def test_mor_matches_oracle_and_counters(spark, tmp_path, segments_basic, mor_cfg):
@@ -154,8 +154,7 @@ def test_target_payload_prune_equivalent(spark, tmp_path):
     for i, name in enumerate(sorted(os.listdir(binlog))):
         os.utime(os.path.join(binlog, name), (1_000_000 + i, 1_000_000 + i))
     cfg = EngineConfig(
-        n_buckets=8, n_salt=1, shuffle_partitions=8, merge_mode="mor",
-        compact_delta_files=2,
+        n_buckets=8, n_salt=1, shuffle_partitions=8, compact_delta_files=2,
     )
     root = str(tmp_path / "table")
     results = replay_stream(
@@ -192,7 +191,7 @@ def test_written_files_do_not_depend_on_task_count(
 
     cfg = EngineConfig(
         n_buckets=2, n_salt=1, shuffle_partitions=shuffle_partitions,
-        merge_mode="mor", compact_delta_files=100,
+        compact_delta_files=100,
     )
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)

@@ -77,7 +77,7 @@ def test_view_matches_batch_at_every_snapshot(
     spark, tmp_path, segments_basic, small_cfg
 ):
     cap = 256
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     idx = IncrementalLshIndex(str(tmp_path / "lsh"), root,
@@ -102,7 +102,7 @@ def test_view_delete_of_canonical_and_update(spark, tmp_path, small_cfg):
     """Deleting a cluster's canonical re-canonicalizes (one fewer kept);
     updating a member's text out of the cluster re-admits it."""
     cap = 256
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     idx = IncrementalLshIndex(str(tmp_path / "lsh"), root,
@@ -147,7 +147,7 @@ def test_view_cap_flip_both_directions(spark, tmp_path, small_cfg):
     nobody touched — the view must track both (this is why the candidate
     diff is recomputed per refresh)."""
     cap = 3
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     idx = IncrementalLshIndex(str(tmp_path / "lsh"), root,

@@ -3,6 +3,7 @@ don't hope for them. These tests fail if a refactor breaks predicate
 pushdown, column pruning, broadcast selection or map-side partial
 aggregation."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from sfr_ingest_pipeline_spark.operators.lww import lww_reduce
@@ -77,7 +78,7 @@ def test_merge_plan_no_cartesian_and_partial(spark, tmp_path, segments_basic, sm
     """The fused LWW+MERGE plan: no cartesian anywhere, map-side combine on."""
     from pyspark.sql import types as T
 
-    from sfr_ingest_pipeline_spark.operators.merge import _merge_agg, _null_fill
+    from sfr_ingest_pipeline_spark.operators.merge import _null_fill
     from sfr_ingest_pipeline_spark.schema import TRANSCRIPT_SCHEMA
     from sfr_ingest_pipeline_spark.table.transcript_table import physical_schema
 
@@ -93,9 +94,50 @@ def test_merge_plan_no_cartesian_and_partial(spark, tmp_path, segments_basic, sm
         "_has_t": F.lit(False),
     })
     carry = [f.name for f in phys.fields if f.name not in ("conv_id", "turn_idx")]
-    resolved = _merge_agg(src, ["conv_id", "turn_idx"], carry, ["ts", "event_seq"])
+    # the row-mode merge aggregate, built the way apply_batch builds it
+    resolved = lww_reduce(
+        src, ["conv_id", "turn_idx"],
+        ["ts", "event_seq", F.col("_src_rank").alias("_tie")],
+        payload_cols=[*carry, "_src_rank"],
+        aggs={"_n_s": F.sum, "_has_t": F.max},
+    )
     assert not has_cartesian_product(resolved)
     assert has_partial_aggregate(resolved)
+
+
+@pytest.mark.parametrize("column_merge", ["row", "coalesce"])
+def test_fused_merge_one_wide_shuffle(
+    spark, tmp_path, monkeypatch, segments_basic, column_merge
+):
+    """The fused LWW+MERGE aggregate of apply_batch (row mode's lww_reduce,
+    coalesce mode's coalesce_fold) costs exactly ONE hash exchange, and the
+    salted pre-phase exactly one more."""
+    import re
+    from dataclasses import replace
+
+    from sfr_ingest_pipeline_spark.config import EngineConfig
+    from sfr_ingest_pipeline_spark.operators.merge import apply_batch
+    from sfr_ingest_pipeline_spark.plans import explain_str
+    from sfr_ingest_pipeline_spark.table.transcript_table import TranscriptTable
+
+    merged = []
+    write = TranscriptTable.write_bucketed
+
+    def spy(self, df, *args, **kwargs):
+        merged.append(explain_str(df, "simple"))  # merge output, pre-write
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(TranscriptTable, "write_bucketed", spy)
+    cfg = EngineConfig(n_buckets=2, shuffle_partitions=4,
+                       column_merge=column_merge)
+    batch = spark.createDataFrame(segments_basic[0])
+    for n_salt, want in ((1, 1), (4, 2)):
+        root = str(tmp_path / f"t{n_salt}")
+        TranscriptTable.create(root, n_buckets=cfg.n_buckets)
+        apply_batch(spark, root, batch, 0, config=replace(cfg, n_salt=n_salt))
+        plan = merged.pop()
+        shuffles = re.findall(r"Exchange hashpartitioning", plan)
+        assert len(shuffles) == want, plan
 
 
 def test_lsh_vector_queries_no_cartesian(spark):

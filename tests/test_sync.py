@@ -212,7 +212,7 @@ def test_coalesce_stale_fill_replicates(spark, tmp_path, small_cfg):
 
     import pandas as pd
 
-    cfg = replace(small_cfg, column_merge="coalesce", merge_mode="mor")
+    cfg = replace(small_cfg, column_merge="coalesce", compact_delta_files=8)
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     TranscriptTable.create(src, n_buckets=cfg.n_buckets)
 
@@ -259,7 +259,7 @@ def test_sync_coalesce_random_schedule_converges(spark, tmp_path, small_cfg, see
     from dataclasses import replace
 
     rng = random.Random(seed)
-    cfg = replace(small_cfg, column_merge="coalesce", merge_mode="mor")
+    cfg = replace(small_cfg, column_merge="coalesce", compact_delta_files=8)
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
     TranscriptTable.create(src, n_buckets=cfg.n_buckets)

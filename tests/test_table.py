@@ -258,9 +258,9 @@ def test_changes_between_snapshots(spark, tmp_path, small_cfg):
         ev("U", "c1", 1, "b2", 10), ev("D", "c2", 0, "", 11), ev("I", "c3", 0, "z", 12),
     ])
 
-    for mode in ("cow", "mor"):
-        cfg = dc_replace(small_cfg, merge_mode=mode)
-        root = str(tmp_path / f"chg_{mode}")
+    for threshold in (0, 8):
+        cfg = dc_replace(small_cfg, compact_delta_files=threshold)
+        root = str(tmp_path / f"chg_{threshold}")
         TranscriptTable.create(root, n_buckets=cfg.n_buckets)
         r0 = apply_batch(spark, root, spark.createDataFrame(batch0), 0, config=cfg)
         r1 = apply_batch(spark, root, spark.createDataFrame(batch1), 1, config=cfg)
@@ -275,7 +275,7 @@ def test_changes_between_snapshots(spark, tmp_path, small_cfg):
             ("c1", 1): ("update", "b2"),
             ("c2", 0): ("delete", "x"),      # delete carries the OLD row
             ("c3", 0): ("insert", "z"),
-        }, (mode, got)
+        }, (threshold, got)
 
         # net across both batches from the empty created snapshot: c2 never
         # survives, c1 turn 1 nets to a plain insert at its final value
@@ -289,7 +289,7 @@ def test_changes_between_snapshots(spark, tmp_path, small_cfg):
             ("c1", 0): ("insert", "a"),
             ("c1", 1): ("insert", "b2"),
             ("c3", 0): ("insert", "z"),
-        }, (mode, got_net)
+        }, (threshold, got_net)
 
         # same-snapshot diff is empty
         assert t.changes_between(spark, r1.snapshot_id, r1.snapshot_id).count() == 0
@@ -312,7 +312,7 @@ def test_changes_between_reads_only_touched_buckets(spark, tmp_path, small_cfg):
             "event_seq": seq,
         }
 
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "prune")
     TranscriptTable.create(root, n_buckets=8)
     wide = pd.DataFrame(
@@ -356,7 +356,7 @@ def test_changelog_range_envelope_prunes_state_files(spark, tmp_path, small_cfg)
             "event_seq": seq,
         }
 
-    cfg = dc_replace(small_cfg, merge_mode="mor", n_buckets=2)
+    cfg = dc_replace(small_cfg, compact_delta_files=8, n_buckets=2)
     root = str(tmp_path / "env")
     TranscriptTable.create(root, n_buckets=2)
     wide = pd.DataFrame(
@@ -416,7 +416,7 @@ def test_changelog_skips_maintenance_rewrites_for_candidates(
             "event_seq": seq,
         }
 
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "cmp")
     TranscriptTable.create(root, n_buckets=small_cfg.n_buckets)
     wide = pd.DataFrame(
@@ -461,7 +461,7 @@ def test_changelog_exact_across_rollback_in_range(spark, tmp_path, small_cfg):
             "event_seq": seq,
         }
 
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "rbk")
     TranscriptTable.create(root, n_buckets=small_cfg.n_buckets)
     b0 = pd.DataFrame([ev("I", "c1", 0, "a", 1), ev("I", "c2", 0, "x", 2)])
@@ -502,7 +502,7 @@ def test_changelog_exact_for_all_pairs_under_random_maintenance(
         }
 
     rng = random.Random(42)
-    cfg = dc_replace(small_cfg, merge_mode="mor", n_buckets=4)
+    cfg = dc_replace(small_cfg, compact_delta_files=8, n_buckets=4)
     root = str(tmp_path / "gauntlet")
     TranscriptTable.create(root, n_buckets=4)
     seq = 0
@@ -809,6 +809,12 @@ def test_engine_config_validates_modes():
         EngineConfig(column_merge="Coalesce")
     with _pytest.raises(ValueError, match="merge_mode"):
         EngineConfig(merge_mode="copy")
+    # merge_mode is an init-only alias of the compaction threshold
+    assert EngineConfig().compact_delta_files == 0
+    assert EngineConfig(merge_mode="cow", compact_delta_files=5).compact_delta_files == 0
+    assert EngineConfig(merge_mode="mor", compact_delta_files=5).compact_delta_files == 5
+    with _pytest.raises(ValueError, match="compact_delta_files"):
+        EngineConfig(merge_mode="mor")
     # byte upcasts are lossless and must not be rejected
     assert coercion_kind(T.ByteType(), T.IntegerType()) == "safe"
     widened = widen_schema(
@@ -817,6 +823,23 @@ def test_engine_config_validates_modes():
         coerce_existing=True,
     )
     assert widened["x"].dataType == T.IntegerType()
+
+
+def test_pre_sharding_snapshot_refused(tmp_path):
+    """A snapshot with an inline ``files`` list (the pre-sharding format)
+    fails to load with an error naming the format."""
+    import json
+
+    root = str(tmp_path / "t")
+    TranscriptTable.create(root, n_buckets=2)
+    path = TranscriptTable._snap_path(root, 1)
+    with open(path, encoding="utf-8") as f:
+        snap = json.load(f)
+    snap["files"] = []
+    with open(path, "w", encoding="utf-8") as f:
+        json.dump(snap, f)
+    with pytest.raises(ValueError, match="pre-sharding"):
+        TranscriptTable.load(root)
 
 
 def test_widen_schema_rejects_drop_and_rename():
@@ -917,7 +940,7 @@ def test_ts_window_scan_prunes_files_exactly(spark, tmp_path, small_cfg):
 
     from sfr_ingest_pipeline_spark.operators.merge import apply_batch
 
-    cfg = dc_replace(small_cfg, merge_mode="mor", compact_delta_files=1000)
+    cfg = dc_replace(small_cfg, compact_delta_files=1000)
     root = str(tmp_path / "tsprune")
     TranscriptTable.create(root, n_buckets=small_cfg.n_buckets)
 

@@ -28,7 +28,7 @@ def _apply(spark, root, cfg, batch_id, rows):
 
 
 def test_tail_from_now_then_per_commit_steps(spark, tmp_path, small_cfg):
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     _apply(spark, root, cfg, 0, [ev("I", "c1", 0, "a", 1)])
@@ -59,7 +59,7 @@ def test_tail_from_now_then_per_commit_steps(spark, tmp_path, small_cfg):
 
 
 def test_tail_net_span_and_seek_replay(spark, tmp_path, small_cfg):
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     _apply(spark, root, cfg, 0, [ev("I", "c1", 0, "a", 1),
@@ -83,7 +83,7 @@ def test_tail_cascade_reconstructs_table(spark, tmp_path, small_cfg):
     """Bronze -> silver: applying every per-commit batch (insert/update as
     upsert, delete as delete) to a dict replica reproduces the table's
     final state exactly."""
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     tail = ChangelogTail(root, str(tmp_path / "cur"), step="per_commit")
@@ -123,7 +123,7 @@ def test_sync_documents_from_changelog(spark, tmp_path, small_cfg):
         sync_documents_from_changelog,
     )
 
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     out = str(tmp_path / "docs")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
@@ -187,7 +187,7 @@ def test_full_resync_uses_semijoin_not_driver_collect(
         sync_documents_from_changelog,
     )
 
-    cfg = dc_replace(small_cfg, merge_mode="mor")
+    cfg = dc_replace(small_cfg, compact_delta_files=8)
     root = str(tmp_path / "t")
     TranscriptTable.create(root, n_buckets=cfg.n_buckets)
     evs = []
